@@ -22,11 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from empujar_spark.session import get_spark  # noqa: E402
-from empujar_spark.plans.corpus import (  # noqa: E402
-    CORPUS,
-    REGISTRATION_ORDER,
-    load,
-)
+from empujar_spark.plans.corpus import CORPUS, load  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -247,19 +243,18 @@ def main() -> None:
         "streaming_bloom_admission_spill": prepare_admission_clone,
     }
     samples: dict[str, list[float]] = {}
-    # Walk REGISTRATION_ORDER, not CORPUS: the gate census re-sorts
-    # CORPUS by evidence staleness at every import, so its order
-    # changes every round — and per-entry timings are order-sensitive
-    # (JIT warm-up, GC phase, shuffle-dir state from the preceding
-    # ~140 queries). The registration order only changes when an entry
-    # is added, so round-over-round diffs compare like with like.
+
     def entry_setup(name):
         hook = setup_hooks.get(name)
         if hook is None:
             return None
         return lambda: hook(spark, SF_DIR)
 
-    for name in REGISTRATION_ORDER:
+    # CORPUS is in registration order, which changes only when an entry
+    # is added — per-entry timings are order-sensitive (JIT warm-up, GC
+    # phase, shuffle-dir state), so round-over-round diffs compare like
+    # with like.
+    for name in CORPUS:
         if name in skip:
             continue
         query = CORPUS[name]

@@ -24,15 +24,18 @@ cannot represent the ``unknown`` (NullType) pending state, which is
 stored physically as an all-NULL string column.
 
 Scale design (100 TB stance):
-- Upsert = new-batch ⟕ existing anti-join + union, written to a staging
-  dir then atomically swapped. The incoming batch is broadcast when small
-  (typical incremental loads), so the existing table is scanned once with
+- Upsert = existing ⟕ broadcast(batch keys) anti-join + union with the
+  batch, written to a fresh ``data-v{N}`` dir and committed by an atomic
+  ``_current`` pointer flip, so the existing table is scanned once with
   no shuffle.
-- Tables above ``partition_rows_threshold`` are hash-distributed on the
-  primary key at write (``repartition(pk)``) so successive merges on the
-  same key co-partition — the Spark analogue of Redshift's
-  ``distkey(id)`` (redshift.js:340-342); ``sortWithinPartitions`` on the
-  watermark column mirrors ``sortkey`` (redshift.js:344-350).
+- Physical layout is a table property: the optional ``layout`` field of
+  ``_schema.json``, declared once (``replace_table(layout=...)``,
+  ``compact``) and applied by ``_write`` on every later commit — the
+  analogue of Redshift declaring ``distkey``/``sortkey`` at create time
+  (redshift.js:340-350). Absent, a commit sorts within partitions on the
+  ``updated_at``/``created_at`` sortkey; ``cluster_by`` range-partitions
+  into ``files`` sorted files, ``zorder_by`` does the same on a z-curve
+  code, and a bare ``files`` hash-distributes on the primary key.
 - No driver-side row loops: row-dict batches are converted to DataFrames
   once via the §1.2 lattice and everything after is JVM-side.
 """
@@ -78,8 +81,6 @@ class Warehouse:
         name: str = "warehouse",
         primary_key: str = "id",  # mysql.js:27-29 default
         varchar_length: int = VARCHAR_DEFAULT_LENGTH,
-        partition_rows_threshold: int = 5_000_000,
-        target_partitions: int | None = None,
         partition_cols: dict[str, list[str]] | None = None,
         keep_old_versions: int = 2,
     ) -> None:
@@ -88,8 +89,6 @@ class Warehouse:
         self.name = name
         self.primary_key = primary_key
         self.varchar_length = varchar_length
-        self.partition_rows_threshold = partition_rows_threshold
-        self.target_partitions = target_partitions
         # table → hive-partition columns (date/category layout: partition
         # pruning turns time-range scans into directory selection at 100 TB)
         self.partition_cols = partition_cols or {}
@@ -525,7 +524,7 @@ class Warehouse:
 
     def _create_table(
         self, table: str, df: DataFrame, incoming: dict[str, ColumnType],
-        preserve_layout: bool = False,
+        layout: dict | None = None,
     ) -> None:
         pk = self.primary_key if self.primary_key in incoming else None
         if pk:
@@ -544,47 +543,24 @@ class Warehouse:
                 c for c in self.partition_cols.get(table, []) if c in incoming
             ],
         }
+        if layout:
+            meta["layout"] = _check_layout(layout)
         self._save_meta(table, meta)
-        self._write(table, df, meta, preserve_layout=preserve_layout)
+        self._write(table, df, meta)
         self.show_tables()
 
-    def _write(
-        self, table: str, df: DataFrame, meta: dict,
-        n_partitions: int | None = None,
-        preserve_layout: bool = False,
-    ) -> None:
+    def _write(self, table: str, df: DataFrame, meta: dict) -> None:
         """Versioned-commit atomic table write: the file set lands in a
         fresh immutable ``data-v{N}`` dir and becomes visible via an
         atomic ``_current`` pointer flip, so in-flight reader scans keep
         their resolved version (reader isolation) instead of dying on a
         renamed-away dir.
 
-        Layout hints at scale: repartition on the primary key above the
-        row threshold (distkey analogue) and sort within partitions on the
-        watermark column (sortkey analogue, redshift.js:340-350).
-        ``n_partitions`` overrides the instance default for THIS write
-        only (compaction passes its computed file count here instead of
-        mutating shared state under concurrent writers), and applies even
-        without a primary key — a pk-less table round-robins.
-        ``preserve_layout`` skips BOTH the pk repartition and the
-        sortkey re-sort: the caller already laid the rows out (the index
-        registry's ``cluster_by`` range-clustering, whose file-skipping
-        contract a pk re-shuffle would silently destroy when the
-        warehouse was built with ``target_partitions`` set)."""
-        pk = meta.get("primary_key")
-        cols = [c["name"] for c in meta["columns"]]
-        df = df.select(*cols)
-        if not preserve_layout:
-            n_parts = (
-                self.target_partitions if n_partitions is None else n_partitions
-            )
-            if n_parts:
-                df = df.repartition(n_parts, pk) if pk else df.repartition(n_parts)
-            sort_col = next(
-                (c for c in _SORTKEY_CANDIDATES if c in cols), None
-            )
-            if sort_col:
-                df = df.sortWithinPartitions(sort_col)
+        The ONE commit path for table data: every write lays its rows
+        out by the table's stored ``meta["layout"]`` (see
+        :func:`_apply_layout`), so a layout declared once survives every
+        later upsert, delete, retype and compaction."""
+        df = _apply_layout(df.select(*[c["name"] for c in meta["columns"]]), meta)
         # Reserve the next version dir under the lock (concurrent pages
         # writing the same table each get a distinct version; last
         # committer wins the pointer, matching the old last-swap-wins).
@@ -811,9 +787,7 @@ class Warehouse:
         self._save_meta(table, meta)
         return n
 
-    def replace_table(
-        self, table: str, data, preserve_layout: bool = False
-    ) -> int:
+    def replace_table(self, table: str, data, layout: dict | None = None) -> int:
         """Overwrite a table's contents (TRUNCATE + INSERT semantics)
         via a versioned commit: in-flight readers keep their resolved
         ``data-v{N}``; the replaced state stays readable through
@@ -822,10 +796,21 @@ class Warehouse:
         silently narrows a column the old data needed. This is the
         rebuild primitive the index registry uses — a rebuilt index
         must atomically supersede, never merge into, its predecessor.
-        ``preserve_layout=True`` commits the caller's partitioning and
-        sort order verbatim (no pk repartition, no sortkey re-sort) —
-        required for range-clustered index components whose parquet
-        footer min/max file-skipping depends on that layout."""
+
+        ``layout`` declares the table's physical layout, stored in its
+        meta and applied by every later commit (upserts included):
+
+        - ``{"cluster_by": [cols], "files": N}`` range-partitions into N
+          files sorted on ``cols``, so each file's footer min/max covers
+          a narrow, disjoint slice and range/IN predicates skip files;
+        - ``{"zorder_by": [cols], "files": N}`` (2+ numeric/timestamp
+          columns) does the same on the z-curve of the columns'
+          quantized values, keeping files narrow in EVERY column;
+        - ``{"files": N}`` hash-distributes on the primary key (round-
+          robin without one) into N files, each sorted like the default.
+
+        ``None`` keeps the stored layout; ``{}`` resets to the default
+        sortkey-sorted write."""
         existing_types = (
             self.column_types(table) if self.table_exists(table) else None
         )
@@ -833,12 +818,14 @@ class Warehouse:
         if not df.columns:
             return 0
         if not self.table_exists(table):
-            self._create_table(table, df, incoming, preserve_layout=preserve_layout)
+            self._create_table(table, df, incoming, layout)
             return self.table_size(table)
         meta = self._reconcile_schema(table, incoming)
-        self._write(
-            table, self._conform(df, meta), meta, preserve_layout=preserve_layout
-        )
+        if layout is not None:
+            meta.pop("layout", None)
+            if layout:
+                meta["layout"] = _check_layout(layout)
+        self._write(table, self._conform(df, meta), meta)
         # persist the reconciled meta AFTER the data lands (same crash
         # ordering as insert_data). Round 12 bug fix: this save was
         # missing, so a replace that promoted a type or added a column
@@ -1322,111 +1309,6 @@ class Warehouse:
         writer.option("path", path).saveAsTable(name)
         return name
 
-    def save_clustered(
-        self,
-        table: str,
-        df: DataFrame,
-        cluster_by: str | list[str],
-        target_files: int = 32,
-    ) -> str:
-        """Write ``table`` range-CLUSTERED on ``cluster_by``: rows are
-        range-partitioned then sorted within each file, so every data file
-        covers a narrow, non-overlapping slice of the cluster key. Parquet
-        footer min/max stats then let a range predicate skip whole files
-        and row groups at scan time — the open-format analogue of a
-        Redshift ``sortkey`` (redshift.js:340-342) and the third leg of
-        the data-skipping story next to Hive partitions (coarse equality
-        dirs) and hash buckets (co-located equi-joins): clustering serves
-        RANGE predicates on high-cardinality columns, where partitioning
-        by value would explode the directory count.
-
-        ``target_files`` bounds file count: at 100 TB pick it so each file
-        lands near the 256 MB-1 GB parquet sweet spot; range partitioning
-        samples the key distribution, so skew in ``cluster_by`` still
-        yields balanced files. Read back with :meth:`read_clustered`.
-        """
-        keys = _as_key_list(cluster_by)
-        path = os.path.join(self.path, f"{table}.clustered")
-        (
-            df.repartitionByRange(target_files, *[F.col(k) for k in keys])
-            .sortWithinPartitions(*keys)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        return path
-
-    def read_clustered(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self.path, f"{table}.clustered")
-        )
-
-    def save_zordered(
-        self,
-        table: str,
-        df: DataFrame,
-        cluster_by: list[str],
-        target_files: int = 32,
-        bits: int = 16,
-    ) -> str:
-        """Write ``table`` Z-ORDER clustered on two or more numeric/
-        timestamp columns: each row gets a z-value interleaving the bits
-        of its per-column quantized ranks, and files are range-partitioned
-        + sorted on that z-value. Because the z-curve is locality-
-        preserving in EVERY dimension, each data file covers a narrow
-        min/max slice of EACH cluster column — so footer-stats skipping
-        works for a selective predicate on ANY of them, including the
-        non-leading ones, which plain range clustering (lexicographic
-        sort) cannot serve. The open-format analogue of Delta/Iceberg
-        OPTIMIZE ZORDER BY on top of save_clustered's sortkey story.
-
-        Quantization needs per-column min/max: ONE tiny stats aggregate
-        (a single row to the driver — at 100 TB this is the column-stats
-        scan warehouses already maintain, not a data collect). Columns
-        are quantized to ``bits`` levels; the interleave is pure
-        shiftright/shiftleft/bitwise-OR column expressions, JVM-side.
-        """
-        keys = _as_key_list(cluster_by)
-        if len(keys) < 2:
-            raise ValueError("z-ordering needs >= 2 cluster columns")
-        stats = df.agg(
-            *[F.min(F.col(k).cast("double")).alias(f"min_{k}") for k in keys],
-            *[F.max(F.col(k).cast("double")).alias(f"max_{k}") for k in keys],
-        ).first()
-        n_levels = (1 << bits) - 1
-        quantized = []
-        for k in keys:
-            lo, hi = stats[f"min_{k}"], stats[f"max_{k}"]
-            span = (hi - lo) or 1.0
-            q = F.floor(
-                (F.col(k).cast("double") - F.lit(lo)) / F.lit(span) * n_levels
-            ).cast("long")
-            quantized.append(F.least(F.greatest(q, F.lit(0)), F.lit(n_levels)))
-        ncols = len(keys)
-        z = F.lit(0).cast("long")
-        for b in range(bits):
-            for j, q in enumerate(quantized):
-                z = z.bitwiseOR(
-                    F.shiftleft(
-                        F.shiftright(q, b).bitwiseAND(F.lit(1)),
-                        b * ncols + j,
-                    ).cast("long")
-                )
-        path = os.path.join(self.path, f"{table}.zordered")
-        (
-            df.withColumn("__z", z)
-            .repartitionByRange(target_files, F.col("__z"))
-            .sortWithinPartitions("__z")
-            .drop("__z")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        return path
-
-    def read_zordered(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self.path, f"{table}.zordered")
-        )
-
     def _bucketed_name(self, table: str) -> str:
         """Catalog identifier for a bucketed table — includes a digest of
         the warehouse path so two Warehouse instances with the default
@@ -1612,6 +1494,8 @@ class Warehouse:
         at scale thousands of KB-files turn every scan's planning and
         open() phase into the bottleneck. Returns the file count written.
 
+        The count is recorded as the layout's ``files`` (any clustering
+        is kept), so later commits stay at it instead of re-accreting.
         Uses the same versioned-commit path as every write, so readers
         never see a half-compacted table."""
         meta = self._load_meta(table)
@@ -1623,7 +1507,9 @@ class Warehouse:
             for f in fs
         )
         n_files = max(1, int(total // target_file_bytes) + (1 if total % target_file_bytes else 0))
-        self._write(table, df, meta, n_partitions=n_files)
+        meta["layout"] = {**meta.get("layout", {}), "files": n_files}
+        self._write(table, df, meta)
+        self._save_meta(table, meta)
         return n_files
 
     # ------------------------------------------------------- snapshots
@@ -1809,6 +1695,90 @@ class Warehouse:
 
 def _as_key_list(key: str | list[str]) -> list[str]:
     return [key] if isinstance(key, str) else list(key)
+
+
+def _check_layout(layout: dict) -> dict:
+    """Validate a declared table layout (forms: Warehouse.replace_table)
+    before it is stored — a malformed one would fail every later commit
+    of the table. Returns it with key columns as lists."""
+    unknown = set(layout) - {"cluster_by", "zorder_by", "files"}
+    if unknown:
+        raise ValueError(f"unknown layout field(s) {sorted(unknown)}")
+    if "cluster_by" in layout and "zorder_by" in layout:
+        raise ValueError("a layout takes cluster_by or zorder_by, not both")
+    n = layout.get("files")
+    if not isinstance(n, int) or n < 1:
+        raise ValueError(f"a layout needs a file count files >= 1, got {n!r}")
+    out = {k: v if k == "files" else _as_key_list(v) for k, v in layout.items()}
+    if "zorder_by" in out and len(out["zorder_by"]) < 2:
+        raise ValueError("z-ordering needs >= 2 cluster columns")
+    return out
+
+
+def _apply_layout(df: DataFrame, meta: dict) -> DataFrame:
+    """Lay out one commit's rows by the table's stored ``layout`` (forms:
+    :meth:`Warehouse.replace_table`). A bare ``files`` is the ``distkey``
+    analogue (redshift.js:340-342); without a clustering, rows sort
+    within partitions on the watermark column, the ``sortkey`` analogue
+    (redshift.js:344-350)."""
+    layout = meta.get("layout") or {}
+    n = layout.get("files")
+    if "cluster_by" in layout:
+        keys = layout["cluster_by"]
+        return (
+            df.repartitionByRange(n, *[F.col(k) for k in keys])
+            .sortWithinPartitions(*keys)
+        )
+    if "zorder_by" in layout:
+        return (
+            df.withColumn("__z", _zorder_code(df, layout["zorder_by"]))
+            .repartitionByRange(n, F.col("__z"))
+            .sortWithinPartitions("__z")
+            .drop("__z")
+        )
+    if n:
+        pk = meta.get("primary_key")
+        df = df.repartition(n, pk) if pk else df.repartition(n)
+    sort_col = next((c for c in _SORTKEY_CANDIDATES if c in df.columns), None)
+    return df.sortWithinPartitions(sort_col) if sort_col else df
+
+
+def _zorder_code(df: DataFrame, keys: list[str]):
+    """Z-value column interleaving the bits of each key's quantized value.
+    The z-curve is locality-preserving in EVERY dimension, so files
+    range-partitioned on it keep a narrow footer min/max in each key —
+    footer skipping then serves a selective predicate on ANY of them,
+    including non-leading ones a lexicographic sort cannot (Delta/Iceberg
+    OPTIMIZE ZORDER BY).
+
+    Quantization needs per-key min/max: ONE tiny stats aggregate (a
+    single row to the driver). Keys are quantized to 16 bits; the
+    interleave is pure shift/bitwise-OR column expressions, JVM-side."""
+    bits = 16
+    stats = df.agg(
+        *[F.min(F.col(k).cast("double")).alias(f"min_{k}") for k in keys],
+        *[F.max(F.col(k).cast("double")).alias(f"max_{k}") for k in keys],
+    ).first()
+    n_levels = (1 << bits) - 1
+    quantized = []
+    for k in keys:
+        # an empty or all-NULL key has no range: every row quantizes to 0
+        lo = stats[f"min_{k}"] or 0.0
+        span = ((stats[f"max_{k}"] or 0.0) - lo) or 1.0
+        q = F.floor(
+            (F.col(k).cast("double") - F.lit(lo)) / F.lit(span) * n_levels
+        ).cast("long")
+        quantized.append(F.least(F.greatest(q, F.lit(0)), F.lit(n_levels)))
+    z = F.lit(0).cast("long")
+    for b in range(bits):
+        for j, q in enumerate(quantized):
+            z = z.bitwiseOR(
+                F.shiftleft(
+                    F.shiftright(q, b).bitwiseAND(F.lit(1)),
+                    b * len(keys) + j,
+                ).cast("long")
+            )
+    return z
 
 
 def _parse_rendered(s: str, varchar_length: int) -> ColumnType:

@@ -180,11 +180,13 @@ class IndexRegistry:
         fingerprint) must be given. ``partition_cols`` maps component →
         hive-partition columns (e.g. IVF assignments on ``cid`` so a
         probe prunes to its nprobe inverted lists). ``cluster_by`` maps
-        component → range-cluster columns: rows are range-partitioned
-        and sorted so each parquet file covers a narrow key slice —
-        pushed equality/IN predicates (BM25's query-term filter) then
-        skip whole files via footer min/max; size ``cluster_files`` so
-        files land near the parquet sweet spot at your scale.
+        component → range-cluster columns, stored as the component
+        table's ``cluster_by`` layout: rows are range-partitioned and
+        sorted so each parquet file covers a narrow key slice, on the
+        build and on every later ``fold_component`` — pushed
+        equality/IN predicates (BM25's query-term filter) then skip
+        whole files via footer min/max; size ``cluster_files`` so files
+        land near the parquet sweet spot at your scale.
 
         ATOMICITY: component tables are GENERATION-suffixed
         (``__idx_{name}__g{N}__{comp}``) and the manifest is the
@@ -236,19 +238,14 @@ class IndexRegistry:
                 tbl = self._component_table(name, comp, gen)
                 if partition_cols and comp in partition_cols:
                     self.wh.partition_cols[tbl] = partition_cols[comp]
-                clustered = bool(cluster_by) and comp in cluster_by
-                if clustered:
-                    from pyspark.sql import functions as F
-
-                    keys = cluster_by[comp]
-                    df = df.repartitionByRange(
-                        cluster_files, *[F.col(k) for k in keys]
-                    ).sortWithinPartitions(*keys)
-                # preserve_layout: _write's pk repartition (when the
-                # warehouse runs with target_partitions) would silently
-                # undo the range clustering and with it the pushed
-                # In(term,...) file-skipping contract
-                self.wh.replace_table(tbl, df, preserve_layout=clustered)
+                # the clustering is stored as the table's layout, so the
+                # pushed In(term,...) file skipping survives later folds
+                layout = None
+                if cluster_by and comp in cluster_by:
+                    layout = {
+                        "cluster_by": cluster_by[comp], "files": cluster_files
+                    }
+                self.wh.replace_table(tbl, df, layout=layout)
         except BaseException:
             # failed rebuild: tear down THIS generation's partial tables
             # so repeated crashes can't strand unreferenced data; the

@@ -5479,7 +5479,7 @@ _CLUST_WH: dict = _session_cache()
 )
 def clustered_prune(spark, sf_dir):
     """Range-CLUSTERED table + file/row-group skipping (catalog.py
-    save_clustered): lineitem rewritten range-partitioned and sorted on
+    ``cluster_by`` layout): lineitem written range-partitioned and sorted on
     l_shipdate, so each parquet file covers a narrow non-overlapping date
     slice and the 3-month predicate skips ~95% of files on footer min/max
     stats alone — the data-skipping lever for RANGE predicates on
@@ -5492,15 +5492,15 @@ def clustered_prune(spark, sf_dir):
     key = (_session_key(spark), sf_dir)
     if key not in _CLUST_WH:
         wh = Warehouse(spark, _tmp_warehouse_dir(prefix="clust-wh-"))
-        wh.save_clustered(
+        wh.replace_table(
             "lineitem",
             load(spark, sf_dir, "lineitem").select(
                 "l_shipdate", "l_returnflag", "l_extendedprice"
             ),
-            "l_shipdate",
+            layout={"cluster_by": ["l_shipdate"], "files": 32},
         )
         _CLUST_WH[key] = wh
-    li = _CLUST_WH[key].read_clustered("lineitem")
+    li = _CLUST_WH[key].read("lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp"))
@@ -5532,7 +5532,7 @@ _ZORD_WH: dict = _session_cache()
 )
 def zorder_prune(spark, sf_dir):
     """Z-ORDER clustered table + multi-column file skipping (catalog.py
-    save_zordered): lineitem rewritten on the z-curve of (l_partkey,
+    ``zorder_by`` layout): lineitem written on the z-curve of (l_partkey,
     l_suppkey), then probed with a range predicate on l_suppkey ALONE —
     the non-leading dimension, where a lexicographic sort's footer stats
     are useless. The z-interleave keeps every file's min/max narrow in
@@ -5545,15 +5545,15 @@ def zorder_prune(spark, sf_dir):
     key = (_session_key(spark), sf_dir)
     if key not in _ZORD_WH:
         wh = Warehouse(spark, _tmp_warehouse_dir(prefix="zord-wh-"))
-        wh.save_zordered(
+        wh.replace_table(
             "lineitem",
             load(spark, sf_dir, "lineitem").select(
                 "l_partkey", "l_suppkey", "l_returnflag", "l_extendedprice"
             ),
-            ["l_partkey", "l_suppkey"],
+            layout={"zorder_by": ["l_partkey", "l_suppkey"], "files": 32},
         )
         _ZORD_WH[key] = wh
-    li = _ZORD_WH[key].read_zordered("lineitem")
+    li = _ZORD_WH[key].read("lineitem")
     return (
         li.filter((F.col("l_suppkey") >= 10) & (F.col("l_suppkey") < 20))
         .groupBy("l_returnflag")
@@ -6660,9 +6660,9 @@ def pretrain_pipeline_summary(spark, sf_dir):
 
 
 # --------------------------------------------------------------------
-# Round-9 additions — registered at the END so REGISTRATION_ORDER keeps
-# every pre-existing entry's bench walk position (new entries only ever
-# append; see the stable-walk-order note below).
+# Round-9 additions — registered at the END so CORPUS keeps every
+# pre-existing entry's bench walk position (new entries only ever
+# append).
 # --------------------------------------------------------------------
 
 
@@ -10955,168 +10955,3 @@ def drift_monitor_summary(spark, sf_dir):
     return spark.createDataFrame(
         rows, "check_name string, feature string, stat double"
     )
-
-
-# =====================================================================
-# The correctness gate walks CORPUS in registration order and records at
-# most ~50 rows per round, so the walk order decides which entries get
-# fresh driver evidence. Rounds 6-8 hand-pinned the rotation in
-# _GATE_ORDER_* lists; that census lagged the driver's own record the
-# moment a new CORRECTNESS_r0N.json landed (the r7 RED suite,
-# VERDICT r7 item 1). The census is now DERIVED from the committed
-# records at import time, so it can never lag them:
-#
-#   effective evidence round per entry =
-#     - 0 (never gated / gate it first) if no record names it, or —
-#       for oracle-paired entries — if no record ever hash-matched it
-#       (an entry gated only before its oracle pairing, e.g.
-#       hll_rolling_distinct's r5 no_oracle row, must re-gate as if
-#       never checked; a FAILED hash likewise pins the entry to its
-#       last GOOD round so regressions re-gate immediately);
-#     - else the newest round whose record hash-matched it (rows-only
-#       entries: the newest round with any record, + 0.5 so at equal
-#       staleness the stronger oracle-paired check runs first).
-#
-# Sort ascending by (driver-never-gated?, effective round, registration
-# order): entries the DRIVER has never successfully checked lead the
-# whole walk (r16 / VERDICT r15 item 7 — a new entry greened only by
-# the local gate must not hide behind its own local freshness until the
-# rotation happens to reach it; the driver's record is the independent
-# environment), then stalest-first over the union evidence, the
-# freshest yield their slots. When the driver lands
-# CORRECTNESS_r08.json, the next import re-rotates automatically —
-# there is no list to re-pin and no round-close bookkeeping. Invariants
-# are asserted in tests/test_gate_order.py against the same committed
-# records.
-
-
-def _evidence_rounds(
-    repo: str | None = None, include_local: bool = True
-) -> dict[str, dict[int, bool]]:
-    """entry -> {round: hash_matched} from the committed records: the
-    driver's CORRECTNESS_r*.json UNIONED with CORRECTNESS_LOCAL.json
-    (scripts/local_gate.py runs, keyed {round: {entry: row}}) — a local
-    exact-equality re-green is evidence of the same strength as a
-    driver hash match, so it refreshes staleness identically (VERDICT
-    r14 item 1). Local records only FILL (entry, round) pairs the
-    driver records don't carry: local_gate attributes runs to
-    max(driver round)+1, so a local record can predate the driver
-    rotation it shares a round number with — letting it overwrite
-    would shadow a later-landing driver red for that round (ADVICE
-    r15). A driver verdict, green or red, is therefore never
-    overridden by a local one at the same round.
-
-    ``repo`` overrides the records directory (tests point it at a
-    scratch layout to prove a NEW record re-rotates instead of breaking
-    the census)."""
-    driver, union = _evidence_pair(repo)
-    return union if include_local else driver
-
-
-def _evidence_pair(
-    repo: str | None = None,
-) -> tuple[dict[str, dict[int, bool]], dict[str, dict[int, bool]]]:
-    """(driver, driver∪local) built in ONE pass over the record files —
-    the import-time census needs both maps, and the driver map's inputs
-    are a strict subset of the union's, so parsing the CORRECTNESS_r*
-    set twice (the pre-r16 shape) doubled the per-import record I/O."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-
-    repo = repo or _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-    driver: dict[str, dict[int, bool]] = {}
-    for f in sorted(_glob.glob(_os.path.join(repo, "CORRECTNESS_r*.json"))):
-        n = int(_re.search(r"r(\d+)", _os.path.basename(f)).group(1))
-        try:
-            with open(f) as fh:
-                rec = _json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in rec.items():
-            driver.setdefault(name, {})[n] = bool(
-                isinstance(row, dict) and row.get("hash_match")
-            )
-    union = {name: dict(rounds) for name, rounds in driver.items()}
-    try:
-        with open(_os.path.join(repo, "CORRECTNESS_LOCAL.json")) as fh:
-            local = _json.load(fh)
-    except (OSError, ValueError):
-        local = {}
-    for rnd, rows in local.items():
-        if not (isinstance(rnd, str) and rnd.isdigit() and isinstance(rows, dict)):
-            continue
-        n = int(rnd)
-        for name, row in rows.items():
-            slot = union.setdefault(name, {})
-            if n in slot:  # driver verdict for this round wins, either way
-                continue
-            slot[n] = bool(isinstance(row, dict) and row.get("hash_match"))
-    return driver, union
-
-
-def _effective_round(
-    corpus: dict[str, Query], name: str, evidence: dict[str, dict[int, bool]]
-) -> float:
-    rounds = evidence.get(name, {})
-    if corpus[name].sql is None:
-        # rows-only: any record is the strongest check it can get
-        return (max(rounds) + 0.5) if rounds else 0.5
-    good = [r for r, ok in rounds.items() if ok]
-    return max(good) if good else 0.0
-
-
-def gate_order(
-    corpus: dict[str, Query],
-    evidence: dict[str, dict[int, bool]] | None = None,
-    driver_evidence: dict[str, dict[int, bool]] | None = None,
-) -> list[str]:
-    """The driver-gate walk order, derived from the committed records:
-    (never-driver-gated first, then stalest-first over the union,
-    registration order breaking ties). The first key (r16) pins entries
-    whose only green is the LOCAL gate to the head of the walk — the
-    driver's independent run must see every entry at least once, and
-    without the pin a local re-green would keep deferring exactly the
-    entries that have never had one (VERDICT r15 item 7).
-
-    Purity contract (r16 code-review): a caller-supplied ``evidence``
-    with no ``driver_evidence`` makes the order a pure function of the
-    ARGUMENT — the supplied dict stands in for both maps (the pin then
-    reduces to never-green-anywhere) — never a mix of synthetic
-    evidence with whatever records happen to be on disk."""
-    if evidence is None:
-        drv, uni = _evidence_pair()
-        evidence = uni
-        if driver_evidence is None:
-            driver_evidence = drv
-    elif driver_evidence is None:
-        driver_evidence = evidence
-    reg = {n: i for i, n in enumerate(corpus)}
-
-    def key(name: str):
-        never_driver = _effective_round(corpus, name, driver_evidence) <= 0.5
-        return (
-            0 if never_driver else 1,
-            _effective_round(corpus, name, evidence),
-            reg[name],
-        )
-
-    return sorted(corpus, key=key)
-
-
-# Stable walk order for benchmarking (VERDICT r8 item 1): the census
-# sort below re-orders CORPUS every round as evidence lands, which is
-# exactly what the driver gate needs — but per-entry bench timings are
-# order-sensitive (JIT warm-up, GC phase, shuffle-dir state from the
-# preceding ~140 queries), so bench.py must walk an order that never
-# changes round-over-round. Snapshot the registration order BEFORE the
-# sort; it only changes when an entry is added or removed.
-REGISTRATION_ORDER: tuple[str, ...] = tuple(CORPUS)
-
-_ordered = {name: CORPUS[name] for name in gate_order(CORPUS)}
-assert len(_ordered) == len(CORPUS)
-CORPUS.clear()
-CORPUS.update(_ordered)

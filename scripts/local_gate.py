@@ -9,12 +9,7 @@ hash: exact equality on the sorted frames, dtype-sensitive).
 Each run also MERGES its verdicts into CORRECTNESS_LOCAL.json at the
 repo root ({round: {entry: row}}, same row shape as the driver's
 CORRECTNESS_r*.json, attributed to the in-flight round = latest driver
-record + 1). plans/corpus.py _evidence_rounds unions this file with the
-driver records, so a local re-green refreshes an entry's evidence age
-exactly like a driver gate pass would — tests/test_gate_order.py
-enforces a ≤4-round staleness ceiling over that union (VERDICT r14
-item 1), which is what forces the stale tail to be re-greened here
-instead of waiting on driver-rotation luck.
+record + 1).
 
 Usage:
     python scripts/local_gate.py [sf_dir] [query ...]

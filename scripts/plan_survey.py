@@ -22,7 +22,7 @@ from collections import Counter
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from empujar_spark.session import get_spark  # noqa: E402
-from empujar_spark.plans.corpus import CORPUS, REGISTRATION_ORDER  # noqa: E402
+from empujar_spark.plans.corpus import CORPUS  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -47,7 +47,7 @@ def main() -> None:
     spark = get_spark("plan_survey")
     names = args.names or [
         n
-        for n in REGISTRATION_ORDER
+        for n in CORPUS
         if n not in SKIP and not n.startswith(SKIP_PREFIX)
     ]
     rows = []

@@ -393,7 +393,7 @@ class StubWH:
         self._lock = threading.RLock()
         self.partition_cols = {}
 
-    def replace_table(self, tbl, df, preserve_layout=False):
+    def replace_table(self, tbl, df, layout=None):
         return 1
 
     def show_tables(self):
@@ -502,15 +502,14 @@ class TestGenerationPruning:
         assert reg.describe("partial")["generation"] == 1
 
 
-def test_cluster_by_layout_survives_target_partitions(spark, tmp_path):
-    """ADVICE r10: a warehouse built with target_partitions re-repartitions
-    every write by primary key, silently destroying the registry's
-    range-clustered component layout (and with it the pushed-filter
-    file-skipping contract). Clustered component writes now commit with
-    preserve_layout: each parquet file must cover a narrow, disjoint key
-    slice even when target_partitions is set."""
-    wh = Warehouse(spark, str(tmp_path / "whc"), primary_key="doc_id",
-                   target_partitions=8)
+def test_cluster_by_layout_survives_fold(spark, tmp_path):
+    """The registry's range-clustered component layout is a stored table
+    property, so it survives incremental maintenance: after a
+    fold_component whose batch spans the whole term range, every parquet
+    file must still cover a narrow, disjoint term slice (the pushed
+    In(term,...) file-skipping contract). A layout applied only at
+    register time is lost on the fold's copy-on-write rewrite."""
+    wh = Warehouse(spark, str(tmp_path / "whc"), primary_key="doc_id")
     reg = IndexRegistry(wh)
     df = spark.range(4000).select(
         F.col("id").alias("term"), (F.col("id") % 7).alias("doc_id")
@@ -518,12 +517,16 @@ def test_cluster_by_layout_survives_target_partitions(spark, tmp_path):
     reg.register("clus", "custom", {"postings": df},
                  source_path=f"{SF}/documents.parquet",
                  cluster_by={"postings": ["term"]}, cluster_files=4)
+    batch = spark.range(0, 4400, 11).select(
+        F.col("id").alias("term"), (F.col("id") % 7 + 100).alias("doc_id")
+    )
+    reg.fold_component("clus", "postings", batch, merge_key=["term", "doc_id"])
     tbl = reg.component_table("clus", "postings")
-    vdir = wh._version_dir(tbl, wh._current_version(tbl))
+    assert wh.table_size(tbl) == 4000 + 400
     import glob as _glob
 
-    files = sorted(_glob.glob(f"{vdir}/part-*.parquet"))
-    assert len(files) == 4  # range-clustered layout, not pk-repartitioned
+    files = sorted(_glob.glob(f"{wh._data_dir(tbl)}/part-*.parquet"))
+    assert 1 <= len(files) <= 4  # range-clustered layout, not re-accreted
     ranges = []
     for f in files:
         r = spark.read.parquet(f).agg(

@@ -344,6 +344,12 @@ def test_compact_and_vacuum(spark, tmp_path):
     n_after = sum(f.endswith(".parquet") for f in os.listdir(data_dir))
     assert n_after <= max(n_target, 1) + 1
     assert n_after <= n_before
+    # the compacted file count is a stored layout: a later upsert stays
+    # at it instead of re-accreting one file set per merge
+    wh.insert_data("orders", orders.limit(50), merge_key="o_orderkey")
+    data_dir = wh._data_dir("orders")
+    assert sum(f.endswith(".parquet") for f in os.listdir(data_dir)) <= n_after
+    assert wh.table_size("orders") == before
 
     # vacuum removes a faked crashed-write leftover plus the
     # reader-isolation grace versions, never the live data
@@ -582,14 +588,28 @@ def test_dedup_batch_order_col_on_shuffled_input(spark, tmp_path):
     assert got == {i: 5 for i in range(10)}
 
 
-def test_save_clustered_files_carry_narrow_ranges(spark, tmp_path):
-    """Range clustering must yield files whose footer min/max stats are
-    narrow and non-overlapping enough that a selective range predicate
-    skips most of the table — the property the clustered_prune plan
-    relies on at scale."""
+def _footer_range(path, col):
+    """(min, max) of ``col`` over every row group of one parquet file."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    idx = next(i for i in range(md.num_columns)
+               if md.row_group(0).column(i).path_in_schema == col)
+    stats = [md.row_group(rg).column(idx).statistics
+             for rg in range(md.num_row_groups)]
+    return min(st.min for st in stats), max(st.max for st in stats)
+
+
+def test_cluster_layout_files_carry_narrow_ranges(spark, tmp_path):
+    """A ``cluster_by`` table layout must yield files whose footer min/max
+    stats are narrow and non-overlapping enough that a selective range
+    predicate skips most of the table — the property the clustered_prune
+    plan relies on at scale — and must keep doing so after a later
+    insert, because the layout is a stored table property."""
+    import datetime
     import glob
 
-    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
 
     from empujar_spark.catalog import Warehouse
 
@@ -597,43 +617,40 @@ def test_save_clustered_files_carry_narrow_ranges(spark, tmp_path):
         "l_shipdate", "l_extendedprice"
     )
     wh = Warehouse(spark, str(tmp_path / "wh-clust"))
-    wh.save_clustered("lineitem", li, "l_shipdate", target_files=16)
+    wh.replace_table(
+        "lineitem", li, layout={"cluster_by": ["l_shipdate"], "files": 16}
+    )
+    # the warehouse writes UTC-adjusted INT64 timestamps: tz-aware stats
+    lo = datetime.datetime(1998, 1, 1, tzinfo=datetime.timezone.utc)
+    hi = datetime.datetime(1998, 4, 1, tzinfo=datetime.timezone.utc)
+    batch = li.filter(F.col("l_shipdate") >= F.lit(lo)).limit(300)
+    for step in ("replace", "insert"):
+        if step == "insert":
+            wh.insert_data("lineitem", batch)
+        files = glob.glob(f"{wh._data_dir('lineitem')}/*.parquet")
+        assert len(files) >= 8, step
+        overlapping = 0
+        for f in files:
+            fmin, fmax = _footer_range(f, "l_shipdate")
+            if fmin < hi and fmax >= lo:
+                overlapping += 1
+        # ~7 years of dates in 16 range-files → the 3-month window should
+        # touch only a couple of them
+        assert overlapping <= max(2, len(files) // 4), (step, overlapping, len(files))
 
-    files = glob.glob(str(tmp_path / "wh-clust" / "lineitem.clustered" / "*.parquet"))
-    assert len(files) >= 8
-    import datetime
-
-    lo = datetime.datetime(1998, 1, 1)
-    hi = datetime.datetime(1998, 4, 1)
-    overlapping = 0
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        idx = next(i for i in range(md.num_columns)
-                   if md.row_group(0).column(i).path_in_schema == "l_shipdate")
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            mins.append(st.min); maxs.append(st.max)
-        if min(mins) < hi and max(maxs) >= lo:
-            overlapping += 1
-    # ~7 years of dates in 16+ range-files → the 3-month window should
-    # touch only a couple of them
-    assert overlapping <= max(2, len(files) // 4), (overlapping, len(files))
-
-    # and the clustered read returns exactly the original rows
-    assert wh.read_clustered("lineitem").count() == li.count()
+    # and the table reads back exactly the original rows plus the batch
+    assert wh.table_size("lineitem") == li.count() + batch.count()
 
 
-def test_save_zordered_files_narrow_in_both_dims(spark, tmp_path):
-    """Z-order clustering must keep every file's footer min/max narrow in
-    BOTH cluster columns — the property that lets a range predicate on
-    either dimension (including the non-leading one, where lexicographic
-    sort stats are useless) skip most files. Bound: the mean per-file
-    extent must cover well under half of each column's global range
-    (a random layout covers ~all of it; an ideal 16-file z-layout ~25%)."""
+def test_zorder_layout_files_narrow_in_both_dims(spark, tmp_path):
+    """A ``zorder_by`` table layout must keep every file's footer min/max
+    narrow in BOTH cluster columns — the property that lets a range
+    predicate on either dimension (including the non-leading one, where
+    lexicographic sort stats are useless) skip most files — also after a
+    later insert. Bound: the mean per-file extent must cover well under
+    half of each column's global range (a random layout covers ~all of
+    it; an ideal 16-file z-layout ~25%)."""
     import glob
-
-    import pyarrow.parquet as pq
 
     from empujar_spark.catalog import Warehouse
 
@@ -641,33 +658,46 @@ def test_save_zordered_files_narrow_in_both_dims(spark, tmp_path):
         "l_partkey", "l_suppkey", "l_extendedprice"
     )
     wh = Warehouse(spark, str(tmp_path / "wh-zord"))
-    wh.save_zordered(
-        "lineitem", li, ["l_partkey", "l_suppkey"], target_files=16
+    wh.replace_table(
+        "lineitem", li,
+        layout={"zorder_by": ["l_partkey", "l_suppkey"], "files": 16},
     )
+    batch = li.limit(300)
+    for step in ("replace", "insert"):
+        if step == "insert":
+            wh.insert_data("lineitem", batch)
+        files = glob.glob(f"{wh._data_dir('lineitem')}/*.parquet")
+        assert len(files) >= 8, step
+        for col in ["l_partkey", "l_suppkey"]:
+            ranges = [_footer_range(f, col) for f in files]
+            span = max(h for _, h in ranges) - min(lo for lo, _ in ranges)
+            mean_extent = sum(h - lo for lo, h in ranges) / len(ranges)
+            assert mean_extent < 0.5 * span, (step, col, mean_extent, span)
 
-    files = glob.glob(str(tmp_path / "wh-zord" / "lineitem.zordered" / "*.parquet"))
-    assert len(files) >= 8
-    for col in ["l_partkey", "l_suppkey"]:
-        glo, ghi, extents = None, None, []
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            idx = next(
-                i for i in range(md.num_columns)
-                if md.row_group(0).column(i).path_in_schema == col
-            )
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                mins.append(st.min); maxs.append(st.max)
-            lo, hi = min(mins), max(maxs)
-            extents.append(hi - lo)
-            glo = lo if glo is None else min(glo, lo)
-            ghi = hi if ghi is None else max(ghi, hi)
-        span = ghi - glo
-        mean_extent = sum(extents) / len(extents)
-        assert mean_extent < 0.5 * span, (col, mean_extent, span)
+    assert wh.table_size("lineitem") == li.count() + batch.count()
 
-    assert wh.read_zordered("lineitem").count() == li.count()
+
+def test_layout_is_validated_and_resettable(spark, tmp_path):
+    """A malformed layout is rejected before it is stored (it would fail
+    every later commit); ``layout=None`` keeps the stored layout and
+    ``{}`` resets it to the default write."""
+    from pyspark.sql import functions as F
+
+    from empujar_spark.catalog import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh-lay"))
+    df = spark.range(100).select(F.col("id").alias("k"))
+    for bad in ({"cluster_by": ["k"]}, {"zorder_by": ["k"], "files": 2},
+                {"cluster_by": ["k"], "files": 2, "bits": 8}):
+        with pytest.raises(ValueError):
+            wh.replace_table("t", df, layout=bad)
+    wh.replace_table("t", df, layout={"cluster_by": "k", "files": 2})
+    assert wh._load_meta("t")["layout"] == {"cluster_by": ["k"], "files": 2}
+    wh.replace_table("t", df)
+    assert wh._load_meta("t")["layout"] == {"cluster_by": ["k"], "files": 2}
+    wh.replace_table("t", df, layout={})
+    assert "layout" not in wh._load_meta("t")
+    assert wh.table_size("t") == 100
 
 
 def test_rollup_null_group_key_merges_not_duplicates(spark, tmp_path):
