@@ -17,19 +17,24 @@ parquet-backed, Spark-native connection. Observable operator parity:
 - ``add_column`` / ``alter_column`` / ``copy_table_schema``
   (mysql.js:471-545, 601-605)
 
-Physical layout: one directory per table under the warehouse root,
-parquet files inside, plus ``_schema.json`` holding the engine lattice
-metadata (kind + varchar length + primary key) — needed because parquet
+Physical layout: one directory per table under the warehouse root. Each
+commit is a self-describing ``data-v{N}`` dir: the parquet files plus
+``_meta.json``, the table meta (lattice columns with kind + varchar
+length, primary key, partition columns, layout, footer row count,
+rollup watermark). The lattice metadata is needed because parquet
 cannot represent the ``unknown`` (NullType) pending state, which is
-stored physically as an all-NULL string column.
+stored physically as an all-NULL string column. The ``_current``
+pointer names the live version, so one atomic rename publishes a
+version's rows and its schema together.
 
 Scale design (100 TB stance):
 - Upsert = existing ⟕ broadcast(batch keys) anti-join + union with the
-  batch, written to a fresh ``data-v{N}`` dir and committed by an atomic
-  ``_current`` pointer flip, so the existing table is scanned once with
-  no shuffle.
+  batch, written with its meta to a fresh ``data-v{N}`` dir and
+  committed by an atomic ``_current`` pointer flip, so the existing
+  table is scanned once with no shuffle and every read is an
+  explicit-schema scan (no footer inference job).
 - Physical layout is a table property: the optional ``layout`` field of
-  ``_schema.json``, declared once (``replace_table(layout=...)``,
+  the meta, declared once (``replace_table(layout=...)``,
   ``compact``) and applied by ``_write`` on every later commit — the
   analogue of Redshift declaring ``distkey``/``sortkey`` at create time
   (redshift.js:340-350). Absent, a commit sorts within partitions on the
@@ -49,6 +54,7 @@ import threading
 import uuid
 from typing import Iterable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -65,6 +71,7 @@ from empujar_spark.types import (
 )
 
 _SORTKEY_CANDIDATES = ("updated_at", "created_at")  # redshift.js:344-350
+_META = "_meta.json"  # a version's table meta, inside its data-v{N} dir
 
 
 class TableNotFound(KeyError):
@@ -102,10 +109,6 @@ class Warehouse:
         # concurrent page's write-in-progress
         self._inflight_versions: set[tuple[str, int]] = set()
         self.tables: list[str] = []  # cached like reference self.tables (mysql.js:78-80)
-        # table → ((inode, mtime_ns), inferred footer schema). Every
-        # write commits a fresh immutable data-v{N} dir, so the stat key
-        # changes on every commit — including commits by another process.
-        self._inferred_schema_cache: dict[str, tuple[tuple[int, int], T.StructType]] = {}
         # rows merge_scd2 rejected as older than the open version,
         # keyed by table (pages run in threads — a shared scalar would
         # clobber across concurrent merges on different tables). The
@@ -119,19 +122,19 @@ class Warehouse:
 
     # ------------------------------------------------------------------ paths
     #
-    # Versioned data layout (reader isolation): each write lands in a
-    # fresh immutable ``data-v{N}`` dir and commits by atomically
-    # replacing the ``_current`` pointer file — the lakehouse-manifest
-    # trick (Delta/Iceberg) done directly on the directory layout. A
-    # Spark scan resolves its file listing at DataFrame creation but
-    # reads the files at action time; the previous rename-over swap
-    # moved the listed files out from under in-flight scans
-    # (FAILED_READ_FILE mid-upsert). With a pointer flip the listed
-    # dir is never renamed: readers keep their version until they
+    # Versioned commits (reader isolation): each write lands in a fresh
+    # immutable ``data-v{N}`` dir — its parquet files plus ``_meta.json``,
+    # the table meta they were written under — and commits by atomically
+    # replacing the ``_current`` pointer file: the lakehouse-manifest
+    # trick (Delta/Iceberg) done directly on the directory layout. Spark
+    # skips ``_``-prefixed files, so the meta rides inside the version
+    # without joining its scan, and one rename publishes rows and schema
+    # together. A Spark scan resolves its file listing at DataFrame
+    # creation but reads the files at action time; the listed dir is
+    # never renamed, so readers keep their version until they
     # re-resolve, and old versions are pruned only after
-    # ``keep_old_versions`` newer commits (plus explicit vacuum()).
-    # Legacy un-versioned tables (a plain ``data/`` dir, no pointer)
-    # read as version 0 and migrate on their next write.
+    # ``keep_old_versions`` newer commits (plus explicit vacuum()). A
+    # table exists once its pointer does.
 
     def _table_dir(self, table: str) -> str:
         return os.path.join(self.path, table)
@@ -155,9 +158,7 @@ class Warehouse:
         os.replace(tmp, self._pointer_path(table))
 
     def _version_dir(self, table: str, version: int) -> str:
-        # version 0 is the legacy un-versioned layout
-        name = "data" if version == 0 else f"data-v{version}"
-        return os.path.join(self._table_dir(table), name)
+        return os.path.join(self._table_dir(table), f"data-v{version}")
 
     def _list_versions(self, table: str) -> list[int]:
         """All version numbers with a data dir on disk, ascending."""
@@ -168,9 +169,7 @@ class Warehouse:
             return []
         out = []
         for e in entries:
-            if e == "data" and os.path.isdir(os.path.join(td, e)):
-                out.append(0)
-            elif e.startswith("data-v") and os.path.isdir(os.path.join(td, e)):
+            if e.startswith("data-v") and os.path.isdir(os.path.join(td, e)):
                 try:
                     out.append(int(e[len("data-v"):]))
                 except ValueError:
@@ -181,11 +180,29 @@ class Warehouse:
         """The CURRENT version's immutable data dir."""
         v = self._current_version(table)
         if v is None:
-            return os.path.join(self._table_dir(table), "data")
+            raise TableNotFound(table)
         return self._version_dir(table, v)
 
-    def _meta_path(self, table: str) -> str:
-        return os.path.join(self._table_dir(table), "_schema.json")
+    def _version_meta(self, data_dir: str) -> dict:
+        with open(os.path.join(data_dir, _META)) as fh:
+            return json.load(fh)
+
+    def _at_current(self, table: str, fn):
+        """``fn(data_dir, meta)`` on the current version. A concurrent
+        commit may prune the resolved version between the pointer read
+        and the meta open or the file listing; that raises, and the call
+        re-resolves once under the commit lock, where no prune of this
+        process can interleave."""
+
+        def attempt():
+            d = self._data_dir(table)
+            return fn(d, self._version_meta(d))
+
+        try:
+            return attempt()
+        except (FileNotFoundError, AnalysisException):
+            with self._lock:
+                return attempt()
 
     # ------------------------------------------------------------- catalog ops
     def show_tables(self) -> list[str]:
@@ -196,25 +213,16 @@ class Warehouse:
         self.tables = sorted(
             d
             for d in os.listdir(self.path)
-            if os.path.isfile(self._meta_path(d))
+            if os.path.isfile(self._pointer_path(d))
         )
         return self.tables
 
     def table_exists(self, table: str) -> bool:
-        return os.path.isfile(self._meta_path(table))
+        return os.path.isfile(self._pointer_path(table))
 
     def _load_meta(self, table: str) -> dict:
-        if not self.table_exists(table):
-            raise TableNotFound(table)
-        with open(self._meta_path(table)) as f:
-            return json.load(f)
-
-    def _save_meta(self, table: str, meta: dict) -> None:
-        os.makedirs(self._table_dir(table), exist_ok=True)
-        tmp = self._meta_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f, indent=1)
-        os.replace(tmp, self._meta_path(table))
+        """The meta committed with the table's current version."""
+        return self._at_current(table, lambda _d, meta: meta)
 
     def column_types(self, table: str) -> dict[str, ColumnType]:
         meta = self._load_meta(table)
@@ -239,7 +247,10 @@ class Warehouse:
 
     # --------------------------------------------------------------- read ops
     def read(self, table: str) -> DataFrame:
-        """The table as a DataFrame (unknown columns surface as NULL strings).
+        """The table as a DataFrame (unknown columns surface as NULL strings):
+        an explicit-schema scan of the current version under the meta
+        committed with it, so no footer-inference job runs and predicates
+        push down on the exact physical types.
 
         The returned frame carries ``_empujar_n_rows`` — the write-time
         footer row count from the table meta — as a planner hint:
@@ -247,90 +258,22 @@ class Warehouse:
         without paying a count job (VERDICT r11 #5). The hint describes
         the RAW table read only; any transformation drops the attribute,
         which is exactly when the estimate stops being valid."""
-        meta = self._load_meta(table)
+        return self._at_current(table, self._scan)
+
+    def _scan(self, data_dir: str, meta: dict) -> DataFrame:
+        """Explicit-schema scan of one committed file set under its own
+        meta, hinted with the meta's ``n_rows``."""
         schema = self._physical_schema(meta)
-
-        def hinted(df: DataFrame, n=meta.get("n_rows")) -> DataFrame:
-            if n is not None:
-                df._empujar_n_rows = n
-            return df
-
-        def probe(d):
-            # the whole probe (isdir + listdir + stat) can race a
-            # concurrent commit on a LEGACY un-versioned table (where
-            # the dir itself was renamed) or a prune of the resolved
-            # version — any of the three can raise FileNotFoundError,
-            # so callers retry the full probe after re-resolving the
-            # pointer (63b33b5 guarded only the stat; VERDICT r8 #3)
-            if not os.path.isdir(d) or not any(
-                f.endswith(".parquet") or "=" in f  # hive partition dirs
-                for f in os.listdir(d)
-            ):
-                return None
-            return os.stat(d)
-
-        data_dir = self._data_dir(table)
-        try:
-            st = probe(data_dir)
-        except FileNotFoundError:
-            st = None
-        if st is None:
-            # the table may be genuinely empty — or this reader lagged
-            # more than keep_old_versions commits and its resolved
-            # version was pruned. Re-resolve the pointer under the
-            # commit lock before concluding empty.
-            with self._lock:
-                data_dir = self._data_dir(table)
-                try:
-                    st = probe(data_dir)
-                except FileNotFoundError:
-                    st = None
-            if st is None:
-                # empty table: 0 is exact, not an estimate
-                return hinted(self.spark.createDataFrame([], schema), 0)
-        key = (st.st_ino, st.st_mtime_ns)
-        cached = self._inferred_schema_cache.get(table)
-        if cached is not None and cached[0] == key:
-            inferred = cached[1]
-        else:
-            # footer inference (file listing + footer reads) runs once
-            # per data swap, not once per read() call; the cold listing
-            # can race the same swap window as the probe, so it shares
-            # the locked retry
-            try:
-                inferred = self.spark.read.parquet(data_dir).schema
-            except Exception:
-                with self._lock:
-                    data_dir = self._data_dir(table)
-                    st = probe(data_dir)
-                    if st is None:
-                        return hinted(self.spark.createDataFrame([], schema), 0)
-                    key = (st.st_ino, st.st_mtime_ns)
-                    inferred = self.spark.read.parquet(data_dir).schema
-            self._inferred_schema_cache[table] = (key, inferred)
-        by_name = {f.name: f.dataType for f in inferred}
-        if all(
-            by_name.get(f.name, f.dataType) == f.dataType
-            for f in schema.fields
-        ):
-            # common case: footer types match the meta — explicit-schema
-            # scan keeps predicate pushdown on exact physical types
-            df = self.spark.read.schema(schema).parquet(data_dir)
-            return hinted(df.select(*[f.name for f in schema.fields]))
-        # skew window (crash between data swap and meta save, or vice
-        # versa): conform by try_cast so the table stays readable even
-        # under ANSI mode — missing columns surface as NULL, widened/
-        # narrowed numerics cast, residual incompatible values degrade
-        # to NULL instead of aborting the scan
-        df = self.spark.read.parquet(data_dir)
-        return hinted(self._conform_scan(df, schema))
+        df = self.spark.read.schema(schema).parquet(data_dir).select(*schema.names)
+        df._empujar_n_rows = meta["n_rows"]
+        return df
 
     @staticmethod
     def _conform_scan(df: DataFrame, schema: T.StructType) -> DataFrame:
-        """Conform a raw parquet scan to the meta schema by try_cast:
-        missing columns surface as NULL, widened/narrowed numerics cast,
-        residual incompatible values degrade to NULL instead of aborting
-        the scan under ANSI mode."""
+        """Conform a scan to another meta's schema by try_cast: missing
+        columns surface as NULL, widened/narrowed numerics cast, residual
+        incompatible values degrade to NULL instead of aborting the scan
+        under ANSI mode."""
         present = {f.name for f in df.schema.fields}
         return df.select(
             *[
@@ -353,11 +296,9 @@ class Warehouse:
         queryable history; vacuum removes it. The current version is
         always listed: the pointer only ever flips to a completed
         write."""
-        if not self.table_exists(table):
-            raise TableNotFound(table)
         cur = self._current_version(table)
         if cur is None:
-            return [0] if os.path.isdir(self._version_dir(table, 0)) else []
+            raise TableNotFound(table)
 
         def committed(v: int) -> bool:
             return v == cur or os.path.isfile(
@@ -370,27 +311,22 @@ class Warehouse:
         """Time travel: read a retained committed version of the table —
         the versioned-commit counterpart of snapshot/read_snapshot
         (snapshots pin indefinitely via hardlinks; versions are the
-        rolling automatic history). The scan conforms to the CURRENT
-        meta (an old version may predate added or retyped columns, which
-        surface as NULL / try_cast like the skew-window read path)."""
-        meta = self._load_meta(table)
-        schema = self._physical_schema(meta)
-        cur = self._current_version(table)
-        if version == (cur if cur is not None else 0):
+        rolling automatic history). The version scans under its OWN
+        committed meta, then conforms to the CURRENT meta (an old version
+        may predate added or retyped columns, which surface as NULL /
+        try_cast)."""
+        if version == self._current_version(table):
             return self.read(table)
-        d = self._version_dir(table, version)
-        if (
-            version > (cur if cur is not None else 0)
-            or not os.path.isdir(d)
-            or version not in self.table_versions(table)  # orphan claim dirs
-        ):
+        if version not in self.table_versions(table):  # orphan claim dirs too
             raise ValueError(
                 f"version {version} of {table!r} is not on disk "
                 f"(committed versions: {self.table_versions(table)}; "
                 f"older ones age out after keep_old_versions="
                 f"{self.keep_old_versions} commits or vacuum())"
             )
-        return self._conform_scan(self.spark.read.parquet(d), schema)
+        d = self._version_dir(table, version)
+        schema = self._physical_schema(self._load_meta(table))
+        return self._conform_scan(self._scan(d, self._version_meta(d)), schema)
 
     def _physical_schema(self, meta: dict) -> T.StructType:
         fields = []
@@ -520,17 +456,17 @@ class Warehouse:
         """CREATE TABLE from inferred schema (mysql.js:395-469). Primary key
         ordered first (mysql.js:449-455)."""
         df, incoming = self._normalize_input(data)
-        self._create_table(table, df, incoming)
+        self._write(table, df, self._new_meta(table, incoming))
 
-    def _create_table(
-        self, table: str, df: DataFrame, incoming: dict[str, ColumnType],
+    def _new_meta(
+        self, table: str, incoming: dict[str, ColumnType],
         layout: dict | None = None,
-    ) -> None:
+    ) -> dict:
+        """The meta of a table about to be created from ``incoming``
+        columns, primary key first."""
         pk = self.primary_key if self.primary_key in incoming else None
         if pk:
-            names = [pk] + [c for c in incoming if c != pk]
-            incoming = {n: incoming[n] for n in names}
-            df = df.select(*names)
+            incoming = {pk: incoming[pk], **incoming}
         meta = {
             "table": table,
             "primary_key": pk,
@@ -545,21 +481,24 @@ class Warehouse:
         }
         if layout:
             meta["layout"] = _check_layout(layout)
-        self._save_meta(table, meta)
-        self._write(table, df, meta)
-        self.show_tables()
+        return meta
 
-    def _write(self, table: str, df: DataFrame, meta: dict) -> None:
-        """Versioned-commit atomic table write: the file set lands in a
-        fresh immutable ``data-v{N}`` dir and becomes visible via an
-        atomic ``_current`` pointer flip, so in-flight reader scans keep
-        their resolved version (reader isolation) instead of dying on a
-        renamed-away dir.
+    def _write(self, table: str, df: DataFrame, meta: dict) -> int:
+        """Versioned-commit atomic table write, and the only code that
+        persists a table's meta. The rows land in a fresh immutable
+        ``data-v{N}`` dir with ``meta`` beside them as ``_meta.json``;
+        one atomic ``_current`` pointer flip then publishes both, so no
+        reader ever pairs the new rows with the old schema or the
+        reverse, and in-flight reader scans keep their resolved version
+        (reader isolation). A write that fails before the flip leaves
+        the table as it was, or absent if this was its first write.
 
-        The ONE commit path for table data: every write lays its rows
-        out by the table's stored ``meta["layout"]`` (see
-        :func:`_apply_layout`), so a layout declared once survives every
-        later upsert, delete, retype and compaction."""
+        The ONE commit path for table data: every write selects its
+        columns from ``meta`` and lays its rows out by the stored
+        ``meta["layout"]`` (see :func:`_apply_layout`), so a layout
+        declared once survives every later upsert, delete, retype and
+        compaction. Sets and returns ``meta["n_rows"]``, the exact row
+        count of the committed files."""
         df = _apply_layout(df.select(*[c["name"] for c in meta["columns"]]), meta)
         # Reserve the next version dir under the lock (concurrent pages
         # writing the same table each get a distinct version; last
@@ -567,8 +506,7 @@ class Warehouse:
         # ``os.makedirs`` without exist_ok is itself an atomic claim, so
         # a writer in ANOTHER process that raced us to the same N raises
         # FileExistsError — we retry with the next free number instead of
-        # failing the write (cross-process writers stay last-winner-wins,
-        # as the schema-cache contract above advertises).
+        # failing the write (cross-process writers stay last-winner-wins).
         os.makedirs(self._table_dir(table), exist_ok=True)
         with self._lock:
             new_v = max(
@@ -590,6 +528,13 @@ class Warehouse:
             if part_cols:
                 writer = writer.partitionBy(*part_cols)
             writer.parquet(new_dir)
+            # Row count for planners (sketch.pruned_join's auto probe
+            # pick, VERDICT r11 #5) and for callers' return values, read
+            # from the footers of the files just written (no Spark job
+            # below the threshold in _footer_row_count).
+            meta["n_rows"] = self._footer_row_count(new_dir, meta)
+            with open(os.path.join(new_dir, _META), "w") as fh:
+                json.dump(meta, fh, indent=1)
             # Commit: atomic pointer flip, then prune versions that have
             # aged past the reader-isolation grace. A crash before the
             # flip leaves an orphan dir no reader ever resolves (vacuum
@@ -604,36 +549,21 @@ class Warehouse:
                 ]
                 for v in prunable[: max(0, len(prunable) - self.keep_old_versions)]:
                     shutil.rmtree(self._version_dir(table, v), ignore_errors=True)
-            # Row-count estimate for planners (sketch.pruned_join's auto
-            # probe pick, VERDICT r11 #5): footer-only count of the
-            # committed file set, recorded in the meta the caller
-            # persists (and re-persisted here for callers that save meta
-            # before the write, e.g. _create_table). r16: read the
-            # footers directly on the driver (pyarrow metadata reads, no
-            # Spark job — the count job cost ~0.4s of scheduling per
-            # write, billed to every book chapter and stream epilogue);
-            # past a file-count threshold fall back to the distributed
-            # metadata count, where per-file driver round-trips would
-            # exceed one job's scheduling cost. Best-effort: an
-            # estimate must never fail a committed write.
-            try:
-                meta["n_rows"] = self._footer_row_count(new_dir, meta)
-                self._save_meta(table, meta)
-            except Exception:
-                meta.pop("n_rows", None)
         finally:
             with self._lock:
                 self._inflight_versions.discard((table, new_v))
                 if not committed:
                     # Failed write: tear the reserved dir down so the
                     # empty/partial version never shows up in
-                    # table_versions(), never breaks read_version() with a
-                    # raw schema-inference error, and never consumes a
-                    # keep_old_versions retention slot.
+                    # table_versions(), never breaks read_version(), and
+                    # never consumes a keep_old_versions retention slot.
                     shutil.rmtree(new_dir, ignore_errors=True)
+        if table not in self.tables:
+            self.show_tables()
+        return meta["n_rows"]
 
     def _footer_row_count(self, data_dir: str, meta: dict) -> int:
-        """Exact row count of a committed file set from parquet footer
+        """Exact row count of a written file set from parquet footer
         metadata. Driver-side pyarrow reads for small file sets (the
         local/bench regime: a handful of files, microseconds each, zero
         Spark jobs); the distributed metadata-only count past 256 files,
@@ -665,21 +595,19 @@ class Warehouse:
         - missing column  → add (all-NULL history), mysql.js:299-317
         - promotion needed (int→float, varchar widen→text, unknown→typed)
           → re-type stored column, mysql.js:336-358
-        Returns the updated meta. Physical rewrite of history happens lazily
-        in the caller's staged write (history is being rewritten anyway)."""
+        Returns the updated meta; the caller's ``_write`` commits it with
+        the rewritten rows."""
         meta = self._load_meta(table)
         stored = {
             c["name"]: ColumnType(c["kind"], c.get("char_length", 0), c.get("element", ""))
             for c in meta["columns"]
         }
-        changed = False
         for name, inc in incoming.items():
             if name not in stored:
                 meta["columns"].append(
                     {"name": name, "kind": inc.kind, "char_length": inc.char_length,
                      "element": inc.element}
                 )
-                changed = True
             else:
                 merged = lattice.promote(stored[name], inc)
                 if merged != stored[name]:
@@ -688,12 +616,6 @@ class Warehouse:
                             c["kind"] = merged.kind
                             c["char_length"] = merged.char_length
                             c["element"] = merged.element
-                    changed = True
-        # NOTE: deliberately does NOT persist — callers save the meta
-        # only after their staged data write lands, so a crash mid-write
-        # can never leave _schema.json promising types the parquet files
-        # don't physically have (read() additionally degrades gracefully
-        # on any residual skew window — see read()).
         return meta
 
     def _conform(self, df: DataFrame, meta: dict) -> DataFrame:
@@ -744,11 +666,9 @@ class Warehouse:
                 df = self._dedup_batch(
                     df, key, keep=dedup_keep, order_col=dedup_order_col
                 )
-            self._create_table(table, df, incoming)
-            # the commit just recorded the exact footer row count; a
-            # separate count job would recompute the same number
-            n = self._load_meta(table).get("n_rows")
-            return n if n is not None else self.table_size(table)
+            # the commit records the exact footer row count; a separate
+            # count job would recompute the same number
+            return self._write(table, df, self._new_meta(table, incoming))
 
         # read existing under the OLD physical schema (the lazy plan captures
         # it before files are swapped), then reconcile + cast both sides
@@ -784,7 +704,6 @@ class Warehouse:
             self._write(table, result, meta)
         finally:
             new_df.unpersist()
-        self._save_meta(table, meta)
         return n
 
     def replace_table(self, table: str, data, layout: dict | None = None) -> int:
@@ -818,22 +737,13 @@ class Warehouse:
         if not df.columns:
             return 0
         if not self.table_exists(table):
-            self._create_table(table, df, incoming, layout)
-            return self.table_size(table)
+            return self._write(table, df, self._new_meta(table, incoming, layout))
         meta = self._reconcile_schema(table, incoming)
         if layout is not None:
             meta.pop("layout", None)
             if layout:
                 meta["layout"] = _check_layout(layout)
-        self._write(table, self._conform(df, meta), meta)
-        # persist the reconciled meta AFTER the data lands (same crash
-        # ordering as insert_data). Round 12 bug fix: this save was
-        # missing, so a replace that promoted a type or added a column
-        # wrote the data wide but left _schema.json narrow — read()'s
-        # conform then silently narrowed the values back (a double
-        # column re-read as long) and dropped the new column.
-        self._save_meta(table, meta)
-        return self.table_size(table)
+        return self._write(table, self._conform(df, meta), meta)
 
     @staticmethod
     def _dedup_batch(
@@ -1013,12 +923,9 @@ class Warehouse:
         )
         final_df, incoming = self._normalize_input(final)
         if not exists:
-            self._create_table(table, final_df, incoming)
-        else:
-            meta = self._reconcile_schema(table, incoming)
-            self._write(table, self._conform(final_df, meta), meta)
-            self._save_meta(table, meta)
-        return self.table_size(table)
+            return self._write(table, final_df, self._new_meta(table, incoming))
+        meta = self._reconcile_schema(table, incoming)
+        return self._write(table, self._conform(final_df, meta), meta)
 
     def refresh_rollup(
         self,
@@ -1115,14 +1022,13 @@ class Warehouse:
             merged = partial
         df, incoming = self._normalize_input(merged)
         if not self.table_exists(rollup_table):
-            self._create_table(rollup_table, df, incoming)
-            meta = self._load_meta(rollup_table)
+            meta = self._new_meta(rollup_table, incoming)
         else:
             meta = self._reconcile_schema(rollup_table, incoming)
-            self._write(rollup_table, self._conform(df, meta), meta)
-        # watermark + (possibly promoted) schema land AFTER the data
+            df = self._conform(df, meta)
+        # the watermark commits in the same version as the rows it covers
         meta[meta_key] = new_wm.isoformat() if hasattr(new_wm, "isoformat") else new_wm
-        self._save_meta(rollup_table, meta)
+        self._write(rollup_table, df, meta)
         return int(n_new)
 
     # -------------------------------------------------------------- DDL ops
@@ -1140,7 +1046,6 @@ class Warehouse:
              "element": ct.element}
         )
         self._write(table, self._conform(self.read(table), meta), meta)
-        self._save_meta(table, meta)
 
     def alter_column(self, table: str, column: str, new_type) -> None:
         """Re-type a column (mysql.js:532-545). ``new_type`` is a ColumnType
@@ -1159,16 +1064,12 @@ class Warehouse:
             raise KeyError(f"{table}.{column}")
         old = self.read(table)
         self._write(table, self._conform(old, meta), meta)
-        self._save_meta(table, meta)
 
     def copy_table_schema(self, src: str, dest: str) -> None:
         """Empty clone — CREATE TABLE LIKE (mysql.js:601-605)."""
-        meta = self._load_meta(src)
-        meta = {**meta, "table": dest}
-        self._save_meta(dest, meta)
+        meta = {**self._load_meta(src), "table": dest}
         empty = self.spark.createDataFrame([], self._physical_schema(meta))
         self._write(dest, empty, meta)
-        self.show_tables()
 
     def schema_diff(
         self, old_table: str, new_table: str,
@@ -1509,7 +1410,6 @@ class Warehouse:
         n_files = max(1, int(total // target_file_bytes) + (1 if total % target_file_bytes else 0))
         meta["layout"] = {**meta.get("layout", {}), "files": n_files}
         self._write(table, df, meta)
-        self._save_meta(table, meta)
         return n_files
 
     # ------------------------------------------------------- snapshots
@@ -1519,16 +1419,17 @@ class Warehouse:
         return os.path.join(self._table_dir(table), "snapshots", tag)
 
     def snapshot(self, table: str, tag: str) -> str:
-        """Zero-copy table snapshot: hardlink-clone the current data files
-        plus a frozen copy of the table meta under ``snapshots/<tag>``.
+        """Zero-copy table snapshot: hardlink-clone the current version —
+        its data files and the ``_meta.json`` committed with them — under
+        ``snapshots/<tag>``.
 
-        Parquet data files are immutable here (every write stages a NEW
-        file set and swaps directories), so hardlinks give true snapshot
-        isolation at O(n_files) metadata cost and zero extra bytes — the
-        same trick Delta/Iceberg get from their manifest layer, done
-        directly on the directory layout. Later upserts/compactions swap
-        in new files and the snapshot's links keep the old inodes alive;
-        ``vacuum`` never touches ``snapshots/``."""
+        Parquet data files are immutable here (every write commits a NEW
+        version dir), so hardlinks give true snapshot isolation at
+        O(n_files) metadata cost and zero extra bytes — the same trick
+        Delta/Iceberg get from their manifest layer, done directly on the
+        directory layout. Later upserts/compactions commit new files and
+        the snapshot's links keep the old inodes alive; ``vacuum`` never
+        touches ``snapshots/``."""
         if not self.table_exists(table):
             raise TableNotFound(table)
         dst = self._snapshot_dir(table, tag)
@@ -1545,9 +1446,6 @@ class Warehouse:
                 os.makedirs(tgt, exist_ok=True)
                 for f in files:
                     os.link(os.path.join(dp, f), os.path.join(tgt, f))
-            shutil.copyfile(
-                self._meta_path(table), os.path.join(dst, "meta.json")
-            )
         return dst
 
     def list_snapshots(self, table: str) -> list[str]:
@@ -1559,24 +1457,17 @@ class Warehouse:
     def read_snapshot(self, table: str, tag: str) -> DataFrame:
         """Read a table as of a snapshot — time travel for audits and
         reproducible training runs (pin the corpus a model trained on)."""
-        dst = self._snapshot_dir(table, tag)
-        if not os.path.isdir(dst):
+        d = os.path.join(self._snapshot_dir(table, tag), "data")
+        if not os.path.isdir(d):
             raise TableNotFound(f"{table}@{tag}")
-        with open(os.path.join(dst, "meta.json")) as fh:
-            meta = json.load(fh)
-        return self.spark.read.schema(self._physical_schema(meta)).parquet(
-            os.path.join(dst, "data")
-        )
+        return self._scan(d, self._version_meta(d))
 
     def restore_snapshot(self, table: str, tag: str) -> None:
         """Roll the live table back to a snapshot (versioned commit, so
         readers never see a half-restored table; the snapshot remains)."""
         df = self.read_snapshot(table, tag)
-        dst = self._snapshot_dir(table, tag)
-        with open(os.path.join(dst, "meta.json")) as fh:
-            meta = json.load(fh)
-        self._save_meta(table, meta)
-        self._write(table, df, meta)
+        d = os.path.join(self._snapshot_dir(table, tag), "data")
+        self._write(table, df, self._version_meta(d))
 
     def drop_snapshot(self, table: str, tag: str) -> None:
         dst = self._snapshot_dir(table, tag)
@@ -1584,39 +1475,20 @@ class Warehouse:
             shutil.rmtree(dst, ignore_errors=True)
 
     def vacuum(self) -> list[str]:
-        """Remove non-current data versions (reader-isolation grace
+        """Remove non-current data versions: reader-isolation grace
         copies plus orphans from writes that crashed before their
-        pointer flip) and leftover ``.staging-*`` / ``.old-*`` dirs from
-        the pre-versioned layout. Retention caveat (same as any
-        lakehouse VACUUM): an in-flight scan of an old version dies if
-        its version is vacuumed under it — run between loads, not
-        during them."""
+        pointer flip. Retention caveat (same as any lakehouse VACUUM):
+        an in-flight scan of an old version dies if its version is
+        vacuumed under it — run between loads, not during them."""
         removed = []
-        for root in [self.path] + [
-            os.path.join(self.path, t)
-            for t in sorted(os.listdir(self.path))
-            if os.path.isdir(os.path.join(self.path, t))
-        ]:
-            for entry in sorted(os.listdir(root)):
-                full = os.path.join(root, entry)
-                if os.path.isdir(full) and (
-                    ".staging-" in entry or ".old-" in entry
-                ):
-                    shutil.rmtree(full, ignore_errors=True)
-                    removed.append(os.path.relpath(full, self.path))
         for table in self.show_tables():
             with self._lock:
                 cur = self._current_version(table)
                 for v in self._list_versions(table):
-                    if v != (cur if cur is not None else 0) and (
-                        (table, v) not in self._inflight_versions
-                    ):
-                        shutil.rmtree(
-                            self._version_dir(table, v), ignore_errors=True
-                        )
-                        removed.append(
-                            os.path.relpath(self._version_dir(table, v), self.path)
-                        )
+                    if v != cur and (table, v) not in self._inflight_versions:
+                        d = self._version_dir(table, v)
+                        shutil.rmtree(d, ignore_errors=True)
+                        removed.append(os.path.relpath(d, self.path))
         return removed
 
     # ------------------------------------------------------------- merge ops
@@ -1645,9 +1517,7 @@ class Warehouse:
                 full = True
         if full:
             meta = {**src_meta, "table": destination}
-            self._save_meta(destination, meta)
             self._write(destination, self.read(source), meta)
-            self.show_tables()
             return "full"
 
         src_df = self.read(source)

@@ -235,7 +235,7 @@ def test_partitioned_table_layout_and_pruning(spark, tmp_path):
     import os
 
     wh = Warehouse(spark, str(tmp_path / "pwh"), primary_key="event_id",
-                   partition_cols={"ev": ["event_type"]})
+                   partition_cols={"ev": ["event_type"], "ev2": ["cid"]})
     rows = [{"event_id": i, "event_type": ["click", "view"][i % 2], "value": float(i)}
             for i in range(20)]
     wh.insert_data("ev", rows)
@@ -256,6 +256,19 @@ def test_partitioned_table_layout_and_pruning(spark, tmp_path):
     assert wh.table_size("ev") == 20
     got = wh.read("ev").filter("event_id = 0").first()
     assert got["value"] == 99.0
+    # an integer partition column: the directory values alone would type
+    # it int, the committed meta types the scan bigint, and the filter
+    # still selects directories
+    rows2 = [(i, i % 3, float(i)) for i in range(12)]
+    wh.insert_data(
+        "ev2", spark.createDataFrame(rows2, "event_id long, cid long, value double")
+    )
+    ev2 = wh.read("ev2")
+    assert ev2.schema["cid"].dataType.simpleString() == "bigint"
+    assert sorted(map(tuple, ev2.collect())) == rows2
+    plan = ev2.filter("cid = 2")._jdf.queryExecution().toString()
+    pf_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
+    assert pf_lines and "cid" in pf_lines[0]
 
 
 def test_bucketed_join_no_shuffle(spark, tmp_path):
@@ -351,13 +364,13 @@ def test_compact_and_vacuum(spark, tmp_path):
     assert sum(f.endswith(".parquet") for f in os.listdir(data_dir)) <= n_after
     assert wh.table_size("orders") == before
 
-    # vacuum removes a faked crashed-write leftover plus the
+    # vacuum removes an orphan version left by a crashed write plus the
     # reader-isolation grace versions, never the live data
-    fake = data_dir + ".staging-deadbeef"
-    os.makedirs(fake)
+    orphan = wh._version_dir("orders", wh._current_version("orders") + 7)
+    os.makedirs(orphan)
     removed = wh.vacuum()
-    assert any("staging-deadbeef" in r for r in removed)
-    assert not os.path.isdir(fake)
+    assert os.path.relpath(orphan, wh.path) in removed
+    assert not os.path.isdir(orphan)
     assert os.path.isdir(data_dir)  # live version untouched
     # only the current version dir remains after vacuum
     assert wh._list_versions("orders") == [wh._current_version("orders")]
@@ -752,68 +765,6 @@ def test_meta_saved_after_data_write(spark, tmp_path, monkeypatch):
     assert wh.read("t").count() == 1
 
 
-def test_read_survives_meta_data_type_skew(spark, tmp_path):
-    """The residual skew window (data swapped, meta not yet): read()
-    falls back to cast-conform instead of a parquet conversion error."""
-    import json
-
-    from empujar_spark.catalog import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path), primary_key="id")
-    wh.insert_data("t", spark.createDataFrame([(1, 0.5)], "id int, x double"))
-    # simulate stale meta: claim x is long while parquet stores double
-    mp = wh._meta_path("t")
-    meta = json.load(open(mp))
-    for c in meta["columns"]:
-        if c["name"] == "x":
-            c["kind"] = "long"
-    json.dump(meta, open(mp, "w"))
-    rows = wh.read("t").collect()  # must not raise
-    assert rows[0].x == 0  # cast double→long under the stale meta
-
-
-def test_read_skew_fallback_survives_ansi_incompatible_values(spark, tmp_path):
-    """Under Spark 4's default ANSI mode, a plain cast() in the skew
-    fallback would ABORT the scan on a non-numeric string → bigint;
-    try_cast degrades the residual value to NULL so the table stays
-    readable (the whole point of the fallback)."""
-    import json
-
-    from empujar_spark.catalog import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path), primary_key="id")
-    wh.insert_data(
-        "t", spark.createDataFrame([(1, "abc"), (2, "7")], "id int, x string")
-    )
-    mp = wh._meta_path("t")
-    meta = json.load(open(mp))
-    for c in meta["columns"]:
-        if c["name"] == "x":
-            c["kind"] = "long"
-    json.dump(meta, open(mp, "w"))
-    rows = {r.id: r.x for r in wh.read("t").collect()}  # must not raise
-    assert rows == {1: None, 2: 7}
-
-
-def test_read_schema_inference_cached_per_data_swap(spark, tmp_path):
-    """Footer inference runs once per data swap, not once per read():
-    repeated reads hit the (inode, mtime) cache; a write invalidates it."""
-    from empujar_spark.catalog import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path), primary_key="id")
-    wh.insert_data("t", spark.createDataFrame([(1, "a")], "id int, x string"))
-    assert wh.read("t").count() == 1
-    key1, schema1 = wh._inferred_schema_cache["t"]
-    # poison the cached schema object identity; a cache HIT returns the
-    # same object, a spurious re-inference would replace it
-    wh.read("t")
-    assert wh._inferred_schema_cache["t"][1] is schema1
-    wh.insert_data("t", spark.createDataFrame([(2, "b")], "id int, x string"))
-    assert wh.read("t").count() == 2
-    key2, _ = wh._inferred_schema_cache["t"]
-    assert key2 != key1  # the swap rotated the stat key
-
-
 def test_scd2_rejects_late_rows_and_resolves_ties_deterministically(spark, tmp_path):
     """A replayed CDC batch older than the open version must not create
     intervals overlapping closed history, and an update tied with the
@@ -862,32 +813,54 @@ def test_scd2_rejects_late_rows_and_resolves_ties_deterministically(spark, tmp_p
 
 
 def test_read_probe_retries_whole_window_on_race(spark, tmp_path, monkeypatch):
-    """The two-rename swap window can make ANY of read()'s probe calls
-    (isdir → listdir → stat) raise FileNotFoundError, not just the
-    stat: simulate the listdir landing mid-swap and assert read()
-    retries the whole probe under the swap lock instead of surfacing
-    the race (VERDICT r8 item 3 — 63b33b5 guarded only the stat)."""
+    """A concurrent commit can prune the version read() resolved before
+    read() opens that version's ``_meta.json`` or lists its files. Both
+    raise, and read() must re-resolve the pointer once under the commit
+    lock instead of surfacing the race."""
+    import builtins
     import os as _os
+    import shutil as _shutil
 
     import empujar_spark.catalog as cat
 
     wh = cat.Warehouse(spark, str(tmp_path), primary_key="id")
     wh.insert_data("t", spark.createDataFrame([(1, "a")], "id int, v string"))
-    data_dir = wh._data_dir("t")
 
-    real_listdir = _os.listdir
+    # the meta open of the resolved version raises once
+    meta_path = _os.path.join(wh._data_dir("t"), "_meta.json")
+    real_open = builtins.open
     calls = {"n": 0}
 
-    def flaky_listdir(path):
-        if _os.fspath(path) == data_dir:
+    def flaky_open(path, *a, **kw):
+        if isinstance(path, str) and path == meta_path:
             calls["n"] += 1
             if calls["n"] == 1:
                 raise FileNotFoundError(path)
-        return real_listdir(path)
+        return real_open(path, *a, **kw)
 
-    monkeypatch.setattr(cat.os, "listdir", flaky_listdir)
+    monkeypatch.setattr(cat, "open", flaky_open, raising=False)
     assert wh.read("t").count() == 1
-    assert calls["n"] >= 2  # the probe was retried, not skipped
+    assert calls["n"] >= 2  # re-resolved, not skipped
+    monkeypatch.undo()
+
+    # the listing: between the meta open and the scan, a commit moves
+    # the pointer on and prunes the resolved version
+    real_meta = wh._version_meta
+    pruned = []
+
+    def commit_and_prune_once(data_dir):
+        meta = real_meta(data_dir)
+        if not pruned:
+            v = wh._current_version("t")
+            _shutil.copytree(data_dir, wh._version_dir("t", v + 1))
+            wh._set_current_version("t", v + 1)
+            _shutil.rmtree(data_dir)
+            pruned.append(v)
+        return meta
+
+    monkeypatch.setattr(wh, "_version_meta", commit_and_prune_once)
+    assert wh.read("t").count() == 1
+    assert pruned and wh.table_versions("t") == [pruned[0] + 1]
 
 
 def test_read_swap_race_tight_loop(spark, tmp_path):
@@ -1332,3 +1305,46 @@ def test_footer_row_count_partitioned_and_merge_return(spark, tmp_path):
     assert n2 == 2, n2
     assert wh._load_meta("ev").get("n_rows") == 4
     assert wh.table_size("ev") == 4
+
+
+def test_failed_first_write_leaves_no_table(spark, tmp_path):
+    """A table's first commit is atomic: when the write creating it
+    fails, no table appears (no meta without data), and a later write
+    creates it with that write's schema only."""
+    from pyspark.sql import functions as F
+
+    from empujar_spark.catalog import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path), primary_key="id")
+    bad = spark.createDataFrame([(1, 2)], "id long, x long").withColumn(
+        "v", F.raise_error(F.lit("boom")).cast("string")
+    )
+    with pytest.raises(Exception):
+        wh.insert_data("t", bad)
+    assert not wh.table_exists("t")
+    assert "t" not in wh.show_tables()
+
+    wh.insert_data("t", spark.createDataFrame([(1, "a")], "id long, w string"))
+    assert list(wh.column_types("t")) == ["id", "w"]
+    assert [tuple(r) for r in wh.read("t").collect()] == [(1, "a")]
+
+
+def test_read_after_commit_runs_no_spark_job(spark, tmp_path):
+    """read() scans under the meta committed with the version, so
+    building the DataFrame right after a commit runs no Spark job (no
+    footer schema inference)."""
+    import uuid
+
+    from empujar_spark.catalog import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path), primary_key="id")
+    wh.insert_data("t", spark.createDataFrame([(1, "a")], "id long, v string"))
+    sc = spark.sparkContext
+    group = f"read-after-commit-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "read after commit")
+    try:
+        df = wh.read("t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.count() == 1
