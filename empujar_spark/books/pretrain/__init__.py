@@ -7,13 +7,11 @@ Chapters (discovered by ``Book.load_chapters``, the same
 glob-and-call-every-export contract as books/etl):
 
 1. chapters/ingest/documents.py   (priority 100): incremental
-   content-dedup ingest behind a registry-maintained bloom admission
-   bitmap — the batch checks broadcast bits and only the maybe-seen
-   sliver pays the exact confirm anti-join against the warehouse's
-   historical fingerprint set (the reference's watermark
-   incremental-extract identity, extract.js:15-28, applied to content);
-   after the insert the batch's keys fold into the stored bitmap via
-   ``IndexRegistry.ensure_fresh_fold``. Plus the embeddings upsert.
+   content-dedup ingest — the batch's fingerprints are left-anti joined
+   against the warehouse's historical fingerprint set (the reference's
+   watermark incremental-extract identity, extract.js:15-28, applied to
+   content), so only unseen content is inserted. Plus the embeddings
+   upsert.
 2. chapters/curate/score_filter.py (priority 200): single-scan quality +
    language-ID + repetition signals → filter chain → documents_curated
    (one scan, zero joins — the curated_corpus plan shape).
@@ -35,7 +33,11 @@ glob-and-call-every-export contract as books/etl):
 
 Every chapter reads from and writes to the destination Warehouse, so a
 rerun is incremental/idempotent: ingest adds nothing for already-seen
-content, downstream chapters upsert the same rows.
+content; the per-document tables (scores, curated set, audits) upsert
+the same rows, and the tables computed from the decontaminated set as a
+whole (documents_decontam, documents_clean, train_sequences) are
+replaced, so a document that decontam drops on a rerun leaves all
+three.
 """
 
 from __future__ import annotations

@@ -8,6 +8,11 @@ already dropped at ingest, benchmark-contaminated docs at decontam
 first-occurrence of a span a clean doc also carries); this pass removes
 repeated SPANS (boilerplate, quoted passages) while keeping one
 occurrence corpus-wide.
+
+``documents_clean`` is REPLACED each run, like ``documents_decontam``
+upstream: it is a pure function of that table, whose key set can
+shrink between runs (a document that becomes contaminated when the
+benchmark grows), and an upsert never deletes a row.
 """
 
 
@@ -21,8 +26,6 @@ def chapter_loader(book):
         curated = wh.read("documents_decontam")
         clean = segment_dedup(curated, seg_tokens=5)
         meta = curated.select("doc_id", "source", "lang_pred")
-        wh.insert_data(
-            "documents_clean", clean.join(meta, "doc_id"), merge_key="doc_id"
-        )
+        wh.replace_table("documents_clean", clean.join(meta, "doc_id"))
 
     chapter.add_page("spans", dedup_spans)

@@ -1,5 +1,4 @@
-"""INGEST chapter (priority 100): incremental content-dedup ingest
-behind a registry-maintained bloom admission filter.
+"""INGEST chapter (priority 100): incremental content-dedup ingest.
 
 The reference extracts incrementally by watermark (extract.js:15-28);
 a content corpus has no reliable watermark, so the identity is the md5
@@ -7,28 +6,19 @@ fingerprint: only documents whose normalized-text fingerprint is NOT
 already in the warehouse are ingested. A rerun (or an overlapping crawl
 re-delivery) adds zero rows.
 
-Scale shape: the history's fingerprints are summarized in a few-MB
-bloom bitmap registered in the IndexRegistry (kind="bloom", provenance
-= the documents table's data version). A steady-state ingest checks the
-batch against the BROADCAST bitmap and only the "maybe seen" sliver —
-true dups + ~1% fpp of the fresh rows — pays the exact confirm
-anti-join against history (bloom has no false negatives, so results
-are identical to the plain anti-join). After the insert the batch's
-keys are folded INTO the stored bitmap via ``ensure_fresh_fold`` —
-fold iff the source moved, provenance re-stamped pinned at the
-pre-fold state — so history is never rescanned to maintain the filter.
-If the bitmap is missing or stale (an out-of-band writer advanced the
-table), the ingest falls back to the plain anti-join and
-``ensure_fresh`` rebuilds the bitmap, because a bitmap that might MISS
-history keys would break the no-false-negative admission argument.
+One admission path: the batch's fingerprints are projected on the
+source scan and left-anti joined against ``documents.fingerprint``,
+which is exact, so nothing is kept beside the table to admit against.
+If the history ever outgrows that join, the engine-native answer is
+Spark's runtime bloom-filter join (SPARK-32268), not a hand-maintained
+bitmap.
 """
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
 def chapter_loader(book):
-    from empujar_spark.indexes import IndexRegistry
-    from empujar_spark.operators import sketch as K
     from empujar_spark.operators.text import fingerprint_col
     from empujar_spark.plans.corpus import load
 
@@ -36,8 +26,6 @@ def chapter_loader(book):
     wh = book.destination
     spark = book.spark
     source_dir = book.source_dir
-    reg = IndexRegistry(wh)
-    IDX = "ingest_admission"
 
     def ingest_documents():
         docs = load(spark, source_dir, "documents")
@@ -46,73 +34,18 @@ def chapter_loader(book):
         # pay a doc_id shuffle just to re-attach the columns the
         # projection dropped
         fp = docs.withColumn("fingerprint", fingerprint_col(F.col("text")))
-        has_history = "documents" in wh.show_tables()
-        bloom_live = (
-            has_history
-            and IDX in reg.list_indexes()
-            and not reg.is_stale(IDX)
-        )
-        if bloom_live:
-            # steady state: broadcast-bitmap admission gate; only the
-            # maybe-seen sliver pays the confirm anti-join
-            art = K.bloom_from_df(reg.read(IDX)["bitmap"])
-            fp = K.bloom_ingest_dedup(
-                wh.read("documents"), fp, "fingerprint", bloom=art
-            )
-        elif has_history:
-            seen = wh.read("documents").select("fingerprint").distinct()
+        if wh.table_exists("documents"):
+            seen = wh.read("documents").select("fingerprint")
             fp = fp.join(seen, "fingerprint", "left_anti")
         # batch-internal exact dups collapse to the smallest doc_id
         # (first-occurrence-wins, same contract as exact_dedup)
-        from pyspark.sql import Window
-
         w = Window.partitionBy("fingerprint")
         fresh = (
             fp.withColumn("__keep", F.min("doc_id").over(w))
             .filter(F.col("doc_id") == F.col("__keep"))
             .drop("__keep")
         )
-        if bloom_live:
-            # one materialization of the batch: insert_data scans it for
-            # the write and the bitmap FOLD scans its fingerprints again —
-            # without this the fold re-derives the whole admission
-            # lineage (source scan + flag + confirm join) per
-            # maintenance. persist over localCheckpoint (r16): blocks
-            # release explicitly below instead of waiting on a driver GC
-            # for the ContextCleaner. First runs skip it: the register
-            # path below reads the written table, so nothing consumes
-            # `fresh` twice.
-            fresh = fresh.persist()
         wh.insert_data("documents", fresh, merge_key="doc_id")
-        if bloom_live:
-            try:
-                # fold ONLY the inserted keys into the stored bitmap
-                # (bloom_union is exact); pinned pre-fold provenance
-                reg.ensure_fresh_fold(
-                    IDX,
-                    lambda pinned: K.bloom_fold_into_registry(
-                        reg, IDX, fresh, "fingerprint", pinned=pinned
-                    ),
-                )
-            finally:
-                fresh.unpersist()
-        else:
-            # first run (or bitmap stale/missing): full register over the
-            # table as written, sized with fold headroom
-            m, k = K.bloom_params(
-                max(4 * wh.table_size("documents"), 65536), fpp=0.01
-            )
-            reg.ensure_fresh(
-                IDX, "bloom",
-                lambda: {"bitmap": K.bloom_to_df(
-                    spark,
-                    K.build_bloom_with_params(
-                        wh.read("documents"), "fingerprint", m, k
-                    ), m, k,
-                )},
-                source_table="documents",
-                params={"m": m, "k": k, "fpp": 0.01},
-            )
 
     def ingest_embeddings():
         emb = load(spark, source_dir, "embeddings")

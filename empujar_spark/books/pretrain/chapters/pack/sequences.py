@@ -5,6 +5,9 @@ Split assignment is the md5-bucket rule (stable under reruns and corpus
 growth — operators/profile.py stratified_split); only the train split is
 packed. Packing is md5-sharded (window partitions by shard), so the
 running-sum never funnels the corpus through one partition.
+``train_sequences`` is REPLACED each run: it is a pure function of
+``documents_clean``, whose key set can shrink between runs, and an
+upsert never deletes a row.
 
 LEAKAGE-SAFE SPLIT (opt-in, r16): ingest dedup removes EXACT duplicates
 but span-dedup deliberately keeps distinct documents that still share
@@ -45,10 +48,6 @@ def chapter_loader(book):
             ).select("doc_id", "split")
         train = clean.join(split, "doc_id").filter(F.col("split") == "train")
         packed = pack_sequences(train, budget=256, n_shards=8)
-        wh.insert_data(
-            "train_sequences",
-            packed.join(split, "doc_id"),
-            merge_key="doc_id",
-        )
+        wh.replace_table("train_sequences", packed.join(split, "doc_id"))
 
     chapter.add_page("sequences", pack)

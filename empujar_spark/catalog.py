@@ -558,6 +558,14 @@ class Warehouse:
                     # table_versions(), never breaks read_version(), and
                     # never consumes a keep_old_versions retention slot.
                     shutil.rmtree(new_dir, ignore_errors=True)
+                    # A failed first write leaves no empty table dir;
+                    # a concurrent first writer's reserved version
+                    # keeps the dir non-empty, so rmdir refuses it.
+                    if self._current_version(table) is None:
+                        try:
+                            os.rmdir(self._table_dir(table))
+                        except OSError:
+                            pass
         if table not in self.tables:
             self.show_tables()
         return meta["n_rows"]

@@ -13,7 +13,8 @@ Reference semantics (lib/chapter.js):
 Spark mapping: pages execute in a ThreadPoolExecutor — the Spark scheduler
 is thread-safe, so concurrent pages submit concurrent Spark actions (the
 cluster is the real parallelism boundary). A FAIR scheduler pool per page
-keeps one long job from starving the rest.
+keeps one long job from starving the rest, and a job group
+``book/chapter/page`` per page attributes each Spark job to its page.
 """
 
 from __future__ import annotations
@@ -123,12 +124,21 @@ class Chapter:
     def _run_in_pool(self, name: str, func: Callable) -> None:
         spark = getattr(self.book, "spark", None)
         if spark is not None:
-            # FAIR pool per page so concurrent Spark actions share the cluster
-            spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", f"{self.name}/{name}"
-            )
+            sc = spark.sparkContext
+            # FAIR pool per page so concurrent Spark actions share the
+            # cluster; the job group attributes the page's jobs to it
+            # (statusTracker().getJobIdsForGroup) even when pages overlap
+            sc.setLocalProperty("spark.scheduler.pool", f"{self.name}/{name}")
+            group = f"{self.book.name}/{self.name}/{name}"
+            sc.setJobGroup(group, group)
         try:
             self._run_unit("page", name, func)
         finally:
             if spark is not None:
-                spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
+                for prop in (
+                    "spark.scheduler.pool",
+                    "spark.jobGroup.id",
+                    "spark.job.description",
+                    "spark.job.interruptOnCancel",
+                ):
+                    sc.setLocalProperty(prop, None)

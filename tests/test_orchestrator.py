@@ -312,3 +312,25 @@ def test_jdbc_partition_column_requires_bounds(spark):
     src = JdbcSource(spark, url="jdbc:h2:mem:x", driver="org.h2.Driver")
     with _pytest.raises(ValueError, match="lower_bound"):
         src.get_all("orders", partition_column="id")
+
+
+def test_pages_tag_their_spark_jobs_with_a_job_group(spark):
+    """Each page runs under the job group ``book/chapter/page``, so its
+    Spark jobs can be attributed to it even when pages overlap."""
+    import uuid
+
+    from empujar_spark.book import Book
+
+    book = Book(spark=spark, name=f"jobs-{uuid.uuid4().hex[:8]}",
+                log_state_events=False)
+    ch = book.add_chapter(100, "c", threads=2)
+    for page, n in (("p1", 10), ("p2", 20)):
+        ch.add_page(page, lambda n=n: spark.range(n).count())
+    book.run()
+    tracker = spark.sparkContext.statusTracker()
+    jobs = {
+        page: set(tracker.getJobIdsForGroup(f"{book.name}/c/{page}"))
+        for page in ("p1", "p2")
+    }
+    assert jobs["p1"] and jobs["p2"]
+    assert not jobs["p1"] & jobs["p2"]

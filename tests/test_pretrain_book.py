@@ -38,9 +38,10 @@ def test_ingest_dedup_matches_exact_dedup(pre_wh, spark):
 
 
 def test_rerun_is_idempotent(pre_wh, spark):
-    """A second full run adds no rows anywhere — the content-fingerprint
-    anti-join is the watermark of a content corpus, and every downstream
-    write is a keyed upsert of the same rows."""
+    """A second full run over the same source adds no rows anywhere —
+    the content-fingerprint anti-join is the watermark of a content
+    corpus; the per-document tables upsert the same rows and the global
+    ones are replaced by the same result."""
     from empujar_spark.books.pretrain import build_pretrain_book
 
     before = {t: pre_wh.table_size(t) for t in pre_wh.show_tables()
@@ -134,46 +135,32 @@ def test_quality_gate_fails_fast_on_violation(spark, tmp_path):
         book.run()
 
 
-def test_ingest_maintains_bloom_admission_index(pre_wh, spark):
-    """Round 11: the ingest chapter registers a bloom admission bitmap
-    over the documents table and maintains it through ensure_fresh_fold
-    on every subsequent run — fold iff the source moved, never a
-    history rescan. Invariants: the index exists and is fresh after the
-    book (and after the rerun test's second pass), it is still
-    generation 1 (reruns FOLDED, never re-registered), and every
-    ingested fingerprint is admitted by the bitmap (no false
-    negatives — the property the prefilter's exactness rests on)."""
-    from empujar_spark.indexes import IndexRegistry
-    from empujar_spark.operators import sketch as K
-
-    reg = IndexRegistry(pre_wh)
-    assert "ingest_admission" in reg.list_indexes()
-    assert not reg.is_stale("ingest_admission")
-    assert reg.describe("ingest_admission")["generation"] == 1
-    art = K.bloom_from_df(reg.read("ingest_admission")["bitmap"])
-    missed = (
-        K.with_bloom_flag(pre_wh.read("documents"), "fingerprint", *art)
-        .filter(~F.col("__maybe_seen")).count()
-    )
-    assert missed == 0
-
-
 def test_decontam_drops_planted_leak_and_audits(spark, tmp_path):
     """A training doc embedding a benchmark 8-gram must be EXCISED by
     the decontam chapter (r14): absent from documents_decontam and
     documents_clean, flagged in contamination_audit with the right
     positional hit count — while an equally long clean doc survives to
-    packing. Built on a synthetic source dir so the leak is planted, not
-    hoped for."""
+    packing. The same holds on a rerun: a doc that packed cleanly before
+    the benchmark slice grew to cover it leaves every table downstream
+    of decontam, which then equal a from-scratch run. Built on synthetic
+    source dirs so the leak is planted, not hoped for."""
     import os
     import shutil
 
-    src = str(tmp_path / "source")
-    os.makedirs(src)
-    # embeddings are required by the ingest chapter — reuse the testdata
-    shutil.copyfile(
-        f"{SF}/embeddings.parquet", os.path.join(src, "embeddings.parquet")
-    )
+    def write_source(name, rows):
+        src = str(tmp_path / name)
+        os.makedirs(src)
+        # embeddings are required by the ingest chapter — reuse the testdata
+        shutil.copyfile(
+            f"{SF}/embeddings.parquet", os.path.join(src, "embeddings.parquet")
+        )
+        spark.createDataFrame(
+            rows, "doc_id bigint, text string, lang string, source string"
+        ).withColumn("n_chars", F.length("text")).coalesce(1).write.parquet(
+            os.path.join(src, "documents.parquet")
+        )
+        return src
+
     bench_text = (
         "the quick brown fox jumps over the lazy dog while the rain "
         "keeps falling on the quiet town all night long"
@@ -189,11 +176,7 @@ def test_decontam_drops_planted_leak_and_audits(spark, tmp_path):
     rows = [(0, bench_text, "en", "srcA"),       # doc_id % 97 == 0: benchmark
             (1, leak, "en", "srcA"),
             (2, clean, "en", "srcB")]
-    spark.createDataFrame(
-        rows, "doc_id bigint, text string, lang string, source string"
-    ).withColumn("n_chars", F.length("text")).coalesce(1).write.parquet(
-        os.path.join(src, "documents.parquet")
-    )
+    src = write_source("source", rows)
     wh = run_pretrain(spark, src, str(tmp_path / "wh"))
     decon_ids = {r.doc_id for r in wh.read("documents_decontam").collect()}
     assert 2 in decon_ids and 1 not in decon_ids and 0 not in decon_ids
@@ -203,6 +186,18 @@ def test_decontam_drops_planted_leak_and_audits(spark, tmp_path):
     assert audit[1].contaminated and audit[1].n_hits >= 1
     assert audit[0].contaminated and audit[0].hit_rate == 1.0  # self-leak
     assert not audit[2].contaminated and audit[2].n_grams > 0
+
+    def ids(w, t):
+        return sorted(r.doc_id for r in w.read(t).select("doc_id").collect())
+
+    rerun_dir = str(tmp_path / "wh-rerun")
+    first = run_pretrain(spark, write_source("source-v1", rows[1:]), rerun_dir)
+    assert 1 in ids(first, "documents_clean")
+    assert 1 in ids(first, "train_sequences")
+    rerun = run_pretrain(spark, src, rerun_dir)
+    for t in ("documents_decontam", "documents_clean", "train_sequences"):
+        assert 1 not in ids(rerun, t), t
+        assert ids(rerun, t) == ids(wh, t), t
 
 
 def test_pretrain_book_semantic_decontam_excises_paraphrase_leak(spark):

@@ -1311,6 +1311,8 @@ def test_failed_first_write_leaves_no_table(spark, tmp_path):
     """A table's first commit is atomic: when the write creating it
     fails, no table appears (no meta without data), and a later write
     creates it with that write's schema only."""
+    import os
+
     from pyspark.sql import functions as F
 
     from empujar_spark.catalog import Warehouse
@@ -1323,6 +1325,7 @@ def test_failed_first_write_leaves_no_table(spark, tmp_path):
         wh.insert_data("t", bad)
     assert not wh.table_exists("t")
     assert "t" not in wh.show_tables()
+    assert "t" not in os.listdir(tmp_path)
 
     wh.insert_data("t", spark.createDataFrame([(1, "a")], "id long, w string"))
     assert list(wh.column_types("t")) == ["id", "w"]
