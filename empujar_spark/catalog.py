@@ -32,7 +32,14 @@ Scale design (100 TB stance):
   batch, written with its meta to a fresh ``data-v{N}`` dir and
   committed by an atomic ``_current`` pointer flip, so the existing
   table is scanned once with no shuffle and every read is an
-  explicit-schema scan (no footer inference job).
+  explicit-schema scan (no footer inference job). The batch is used
+  three times (count, key broadcast, union). Only a distributed batch
+  is cached, so its source chain runs once; a driver-held batch (row
+  dicts, local relations) is re-evaluated from driver memory, because
+  a cached plan keeps all ``shuffle.partitions`` partitions of its
+  dedup shuffle and would add that many files to every commit.
+- ``get_max`` reads ``long``/``timestamp`` maxima from the parquet
+  footer statistics of the current version: no Spark job.
 - Physical layout is a table property: the optional ``layout`` field of
   the meta, declared once (``replace_table(layout=...)``,
   ``compact``) and applied by ``_write`` on every later commit — the
@@ -66,6 +73,7 @@ from empujar_spark.types import (
     TEXT,
     LONG,
     DOUBLE,
+    TIMESTAMP,
     ColumnType,
     VARCHAR_DEFAULT_LENGTH,
 )
@@ -398,11 +406,23 @@ class Warehouse:
 
     def get_max(self, table: str, column: str):
         """MAX watermark (mysql.js:193-216): None when the table or column
-        is missing — the caller then does a full extract."""
+        is missing — the caller then does a full extract.
+
+        A ``long`` or ``timestamp`` column's maximum is read from the
+        row-group statistics in the current version's parquet footers,
+        with no Spark job; a timestamp comes back as ``collect()``
+        returns one, a naive datetime in the process's local time. The
+        Spark aggregate answers every other case: other lattice kinds
+        (float statistics leave NaN out, string ones may be missing),
+        hive partition columns (no column chunks) and a row group that
+        holds values but no statistics."""
         if not self.table_exists(table):
             return None
-        if column not in self.column_types(table):
-            return None
+        found, value = self._at_current(
+            table, lambda d, meta: _footer_max(d, meta, column)
+        )
+        if found:
+            return value
         return self.read(table).agg(F.max(F.col(column)).alias("max")).first()["max"]
 
     def table_size(self, table: str) -> int:
@@ -449,7 +469,10 @@ class Warehouse:
         for name, ct in incoming.items():
             dt = T.StringType() if ct.kind == UNKNOWN else ct.to_spark()
             fields.append(T.StructField(name, dt, True))
-        df = self.spark.createDataFrame(tuples, T.StructType(fields))
+        schema = T.StructType(fields)
+        # an Arrow table becomes a driver-local relation (``isLocal()``),
+        # which insert_data re-evaluates instead of caching
+        df = self.spark.createDataFrame(_arrow_table(tuples, schema), schema)
         return df, incoming
 
     def build_table_from_data(self, table: str, data) -> None:
@@ -571,24 +594,12 @@ class Warehouse:
         return meta["n_rows"]
 
     def _footer_row_count(self, data_dir: str, meta: dict) -> int:
-        """Exact row count of a written file set from parquet footer
-        metadata. Driver-side pyarrow reads for small file sets (the
-        local/bench regime: a handful of files, microseconds each, zero
-        Spark jobs); the distributed metadata-only count past 256 files,
-        where serial per-file footer reads on the driver would cost more
-        than one job's scheduling (and on object stores, one round-trip
-        per file)."""
-        files = []
-        for root, _dirs, names in os.walk(data_dir):
-            files.extend(
-                os.path.join(root, n)
-                for n in names
-                if n.endswith(".parquet")
-            )
-        if len(files) <= 256:
-            import pyarrow.parquet as pq
-
-            return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+        """Exact row count of a written file set from its parquet footers
+        (see :func:`_footers`), or the distributed metadata-only count
+        when there are too many files to read them on the driver."""
+        footers = _footers(data_dir)
+        if footers is not None:
+            return sum(md.num_rows for md in footers)
         return (
             self.spark.read.schema(self._physical_schema(meta))
             .parquet(data_dir).count()
@@ -690,14 +701,22 @@ class Warehouse:
             new_df = self._dedup_batch(
                 new_df, key, keep=dedup_keep, order_col=dedup_order_col
             )
-        # r16: materialize the incoming batch ONCE. Without the persist
-        # the batch's whole chain (source scan + conform casts + the
-        # dedup window's shuffle) executed up to three times — the
-        # count job, the broadcast key build, and the union side of the
-        # copy-on-write rewrite. The batch is incremental-sized by
-        # contract; blocks are dropped right after the commit
-        # (blocking=False: removal needn't gate the caller).
-        new_df = new_df.persist()
+        # The batch is evaluated three times: the count job, the
+        # broadcast key build and the union side of the copy-on-write
+        # rewrite. A distributed batch is cached so its source chain
+        # (scan, joins, conform casts, the dedup window's shuffle) runs
+        # once. A driver-held batch (row dicts, or a local relation such
+        # as createDataFrame(pandas)) is re-evaluated from driver memory
+        # instead, because a cached plan's partitioning is fixed before
+        # AQE coalescing (Spark leaves
+        # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning off):
+        # a cached small batch keeps all spark.sql.shuffle.partitions
+        # partitions and writes that many tiny files, where the uncached
+        # one coalesces to one partition and one file. Asked of ``data``
+        # itself: a select over a local relation is no longer local.
+        distributed = isinstance(data, DataFrame) and not data.isLocal()
+        if distributed:
+            new_df = new_df.persist()
         try:
             n = new_df.count()
             if merge_on_duplicates and all(k in table_cols for k in key):
@@ -711,7 +730,8 @@ class Warehouse:
                 result = existing.unionByName(new_df)
             self._write(table, result, meta)
         finally:
-            new_df.unpersist()
+            if distributed:
+                new_df.unpersist()
         return n
 
     def replace_table(self, table: str, data, layout: dict | None = None) -> int:
@@ -1569,6 +1589,106 @@ class Warehouse:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
+
+
+def _footers(data_dir: str) -> list | None:
+    """The parquet footers (pyarrow ``FileMetaData``) of a file set,
+    read on the driver: microseconds a file and no Spark job in the
+    local/bench regime. None past 256 files, where serial per-file reads
+    on the driver (on object stores, one round-trip each) cost more than
+    one Spark job's scheduling."""
+    import pyarrow.parquet as pq
+
+    files = [
+        os.path.join(root, n)
+        for root, _dirs, names in os.walk(data_dir)
+        for n in names
+        if n.endswith(".parquet")
+    ]
+    if len(files) > 256:
+        return None
+    return [pq.read_metadata(f) for f in files]
+
+
+# footer logical type a column of each kind must carry (physical INT64)
+# for get_max to trust its statistics: what Spark writes for LongType
+# and for TimestampType under TIMESTAMP_MICROS
+_FOOTER_MAX_TYPES = {
+    LONG: {"Type": "None"},
+    TIMESTAMP: {"Type": "Timestamp", "isAdjustedToUTC": True,
+                "timeUnit": "microseconds"},
+}
+
+
+def _footer_max(data_dir: str, meta: dict, column: str) -> tuple[bool, object]:
+    """``(True, max)`` of ``column`` over one version's row-group
+    statistics (``max`` None when the meta lacks the column or every
+    value is NULL), or ``(False, None)`` when the footers cannot answer
+    exactly and the caller must aggregate."""
+    kind = next((c["kind"] for c in meta["columns"] if c["name"] == column), None)
+    if kind is None:
+        return True, None
+    if kind not in _FOOTER_MAX_TYPES or column in (meta.get("partition_cols") or []):
+        return False, None
+    footers = _footers(data_dir)
+    if footers is None:
+        return False, None
+    want = _FOOTER_MAX_TYPES[kind]
+    best = None
+    for md in footers:
+        idx = next(
+            (i for i in range(md.num_columns) if md.schema.column(i).path == column),
+            None,
+        )
+        if idx is None:
+            return False, None
+        col = md.schema.column(idx)
+        if col.physical_type != "INT64" or not (
+            want.items() <= json.loads(col.logical_type.to_json()).items()
+        ):
+            return False, None
+        for r in range(md.num_row_groups):
+            rg = md.row_group(r)
+            st = rg.column(idx).statistics
+            if st is not None and st.has_null_count and st.null_count == rg.num_rows:
+                continue  # every value NULL
+            if st is None or not st.has_min_max:
+                return False, None
+            best = st.max_raw if best is None else max(best, st.max_raw)
+    if best is not None and kind == TIMESTAMP:
+        best = T.TimestampType().fromInternal(best)
+    return True, best
+
+
+def _arrow_table(tuples: list[tuple], schema: T.StructType):
+    """Normalized row tuples as a pyarrow Table of ``schema``, holding
+    the values ``createDataFrame(tuples, schema)`` would. Timestamps,
+    also inside arrays, go in as the epoch micros of
+    ``TimestampType.toInternal`` (naive values read as process-local
+    time, aware ones by their offset), because Arrow takes a naive
+    datetime as session-time-zone wall clock and pyarrow drops an
+    aware one's offset."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+
+    cols = list(zip(*tuples)) if tuples else [()] * len(schema.fields)
+    arrays = []
+    for f, col in zip(schema.fields, cols):
+        dt = f.dataType
+        if dt.needConversion():  # a timestamp at some depth
+            col = [dt.toInternal(v) for v in col]
+        arrays.append(pa.array(col, to_arrow_type(_as_micros(dt))))
+    arrow = to_arrow_schema(schema)
+    return pa.Table.from_arrays(arrays, names=arrow.names).cast(arrow)
+
+
+def _as_micros(dt: T.DataType) -> T.DataType:
+    """``dt`` with each TimestampType replaced by its epoch-micros long."""
+    if isinstance(dt, T.TimestampType):
+        return T.LongType()
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_micros(dt.elementType))
+    return dt
 
 
 def _as_key_list(key: str | list[str]) -> list[str]:

@@ -4,7 +4,9 @@ promotion, varchar→text widening, mergeTables decision matrix, dedup
 keep-latest."""
 
 import datetime as dt
+import os
 
+import pandas as pd
 import pytest
 
 from empujar_spark.catalog import TableNotFound
@@ -44,16 +46,39 @@ def test_create_from_data_inference_goldens(warehouse):
     assert list(warehouse.column_types("things"))[0] == "id"
 
 
-def test_upsert_vs_append(warehouse):
+def n_files(wh, table):
+    return sum(
+        n.endswith(".parquet")
+        for _root, _dirs, names in os.walk(wh._data_dir(table))
+        for n in names
+    )
+
+
+def test_upsert_vs_append(warehouse, spark):
     # test/connections/mysql.js:250-291
     warehouse.insert_data("users", [{"id": 1, "name": "evan"}, {"id": 2, "name": "brian"}])
-    warehouse.insert_data("users", [{"id": 1, "name": "EVAN"}])  # upsert default
+    # upsert default; the 64 extra keys land in every shuffle partition,
+    # yet a driver-held batch coalesces to one partition and adds at
+    # most one file to the new version
+    batch = [{"id": 1, "name": "EVAN"}] + [{"id": i, "name": f"u{i}"} for i in range(3, 67)]
+    before = n_files(warehouse, "users")
+    assert warehouse.insert_data("users", batch) == 65
+    assert n_files(warehouse, "users") <= before + 1
     data = rows_by_id(warehouse, "users")
-    assert len(data) == 2
+    assert len(data) == 66
     assert data[1]["name"] == "EVAN"
+    # the same for a local DataFrame batch, in-batch last-wins included
+    pdf = pd.DataFrame({"id": [2] + list(range(100, 164)) + [2],
+                        "name": ["b1"] + [f"p{i}" for i in range(64)] + ["b2"]})
+    before = n_files(warehouse, "users")
+    assert warehouse.insert_data("users", spark.createDataFrame(pdf)) == 65
+    assert n_files(warehouse, "users") <= before + 1
+    data = rows_by_id(warehouse, "users")
+    assert len(data) == 130
+    assert data[2]["name"] == "b2"
 
     warehouse.insert_data("users", [{"id": 1, "name": "evan2"}], merge_on_duplicates=False)
-    assert warehouse.table_size("users") == 3  # plain append keeps the dup
+    assert warehouse.table_size("users") == 131  # plain append keeps the dup
 
 
 def test_in_batch_dedup_last_wins(warehouse):
@@ -97,13 +122,97 @@ def test_int_to_float_promotion(warehouse):
     assert rows_by_id(warehouse, "f")[1]["n"] == 2.0
 
 
-def test_get_max_and_table_size(warehouse):
+def test_get_max_and_table_size(warehouse, spark, tmp_path):
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from empujar_spark.catalog import Warehouse
+
+    def agg_max(wh, table, col):
+        return wh.read(table).agg(F.max(col).alias("max")).first()["max"]
+
     assert warehouse.get_max("missing", "x") is None
-    warehouse.insert_data("m", [{"id": 1, "ts": dt.datetime(2020, 1, 1)},
-                               {"id": 2, "ts": dt.datetime(2021, 6, 1)}])
+    plus2 = dt.timezone(dt.timedelta(hours=2))
+    warehouse.insert_data("m", [
+        {"id": 1, "ts": dt.datetime(2020, 1, 1), "aware": dt.datetime(2021, 6, 1, 12, tzinfo=plus2),
+         "n": -(2**62), "nul": None},
+        {"id": 2, "ts": dt.datetime(2021, 6, 1), "aware": None, "n": 2**62 + 1, "nul": None},
+    ])
     assert warehouse.get_max("m", "ts") == dt.datetime(2021, 6, 1)
+    assert warehouse.get_max("m", "n") == 2**62 + 1
     assert warehouse.get_max("m", "nope") is None
     assert warehouse.table_size("m") == 2
+    # a long column that is NULL throughout, then one a later batch adds
+    warehouse.insert_data("m", spark.createDataFrame([(3, None)], "id long, nul_long long"))
+    warehouse.insert_data("m", [{"id": 4, "late": 7}])
+    for col in ["id", "ts", "aware", "n", "nul", "nul_long", "late"]:
+        assert warehouse.get_max("m", col) == agg_max(warehouse, "m", col), col
+    assert warehouse.get_max("m", "nul_long") is None
+    assert warehouse.get_max("m", "late") == 7
+    # the footer path runs no Spark job
+    sc = spark.sparkContext
+    group = f"get-max-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "get_max from footers")
+    try:
+        got = [warehouse.get_max("m", c) for c in ["id", "ts", "aware", "n", "nul_long"]]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert got[:2] == [4, dt.datetime(2021, 6, 1)]
+    # a table emptied by delete_rows
+    warehouse.delete_rows("m", "id > 0")
+    for col in ["id", "ts", "late"]:
+        assert warehouse.get_max("m", col) is None
+        assert agg_max(warehouse, "m", col) is None
+    # a hive partition column has no column chunks
+    wh = Warehouse(spark, str(tmp_path / "pm"), primary_key="id",
+                   partition_cols={"p": ["day"]})
+    wh.insert_data("p", [{"id": i, "day": i % 3, "ts": dt.datetime(2020, 1, 1 + i)}
+                         for i in range(6)])
+    for col in ["day", "ts"]:
+        assert wh.get_max("p", col) == agg_max(wh, "p", col), col
+    assert wh.get_max("p", "day") == 2
+
+
+@pytest.mark.parametrize("tz", [None, "America/New_York"])
+def test_row_dicts_build_the_list_path_values(warehouse, spark, tz):
+    """Row dicts become an Arrow-backed local relation holding the values
+    createDataFrame(tuples, schema) would, for every lattice kind; naive
+    timestamps read as process-local time under any TZ."""
+    import time
+
+    from empujar_spark import types as lattice
+
+    plus2 = dt.timezone(dt.timedelta(hours=2))
+    rows = [
+        {"long": 2**62 + 1, "double": 1.5, "boolean": True, "varchar": "héllo ✓",
+         "text": "ü" * 300, "binary": b"\x00\xff", "nested": [[1.0, 2.0], [3.0]],
+         "ts_array": [dt.datetime(2021, 6, 1, 12)], "unknown": None,
+         "naive": dt.datetime(2021, 6, 1, 12, 30, 15, 999), "aware": dt.datetime(2021, 6, 1, 12, tzinfo=plus2)},
+        {"long": -(2**62), "double": float("nan"), "boolean": False, "varchar": "日本",
+         "text": None, "binary": bytearray(b"ab"), "nested": [[]],
+         "ts_array": [None, dt.datetime(2021, 1, 15, 23, 30)], "unknown": None,
+         "naive": dt.date(2021, 1, 15), "aware": dt.datetime(2021, 12, 1, 1, tzinfo=dt.timezone.utc)},
+        {k: None for k in ["long", "double", "boolean", "varchar", "text", "binary",
+                           "nested", "ts_array", "unknown", "naive", "aware"]},
+    ]
+    old_tz = os.environ.get("TZ")
+    try:
+        if tz:
+            os.environ["TZ"] = tz
+            time.tzset()
+        df, incoming = warehouse._normalize_input(rows)
+        assert df.isLocal()
+        listed = spark.createDataFrame(lattice.normalize_rows(rows, incoming), df.schema)
+        # repr: NaN never equals itself
+        assert repr(df.collect()) == repr(listed.collect())
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
 
 
 def test_get_all_chunks_and_limit(warehouse):
