@@ -810,10 +810,6 @@ class Warehouse:
             .drop("__pos", "__rn")
         )
 
-    @staticmethod
-    def _dedup_last_wins(df: DataFrame, key: str | list[str]) -> DataFrame:
-        return Warehouse._dedup_batch(df, key, keep="last")
-
     def merge_scd2(
         self,
         table: str,
@@ -852,7 +848,7 @@ class Warehouse:
         upd = df.select(
             *keys, F.col(ts_col).alias("scd_valid_from"), *tracked
         )
-        upd = self._dedup_last_wins(upd, keys + ["scd_valid_from"])
+        upd = self._dedup_batch(upd, keys + ["scd_valid_from"])
 
         if exists:
             stored = self.read(table)

@@ -353,7 +353,8 @@ def minhash_lsh_pairs(
     ``max_bucket``: drop band buckets holding more than this many docs
     before the self-join. Candidate cost is Σ(bucket²); one hot bucket —
     a giant near-identical cluster or a degenerate stop-pattern band —
-    dominates everything at scale (measured in scripts/stress_skew.py).
+    dominates everything at scale (measured by the retired skew stress
+    harness, in git history).
     A dropped bucket's pairs usually survive via the cluster's OTHER
     bands; semantics change (more false negatives), so the oracle-gated
     corpus entry keeps the default None and production ingest opts in."""
@@ -898,12 +899,13 @@ def embedding_dup_pairs(
     scans only nprobe/n_centroids of the corpus — the sub-quadratic,
     recall-tunable regime near-dup thresholds (≥0.9) live in.
 
-    SIZING RULE (measured, scripts/stress.py): ``n_centroids`` must grow
-    with the corpus — c ∝ √n keeps inverted-list length (so per-probe
-    candidate volume n·nprobe/c) bounded, giving the standard IVF
-    O(n^1.5) pair-dedup total. Holding c FIXED makes the candidate join
-    O(n²/c): at 8× data the fixed-c curve bent 8.9× while the √n rule
-    held ~3.5× (n^1.5) on the same box.
+    SIZING RULE (measured by the retired stress harness, in git
+    history): ``n_centroids`` must grow with the corpus — c ∝ √n keeps
+    inverted-list length (so per-probe candidate volume n·nprobe/c)
+    bounded, giving the standard IVF O(n^1.5) pair-dedup total. Holding
+    c FIXED makes the candidate join O(n²/c): at 8× data the fixed-c
+    curve bent 8.9× while the √n rule held ~3.5× (n^1.5) on the same
+    box.
 
     ``method='exact'``: the brute-force crossJoin baseline, kept ONLY as
     an explicit small-n fallback / oracle cross-check. O(n²) through one
@@ -1145,9 +1147,10 @@ def semantic_dedup(
     provably complete and the whole result stays oracle-exact; at
     production scale run ``nprobe < n_centroids`` and c ∝ √n exactly as
     documented on embedding_dup_pairs. That regime's saving is MEASURED
-    on the pair stage in isolation (scripts/stress.py
-    semdedup_pairs_exact/_ann — the shared components loop dominates
-    whole-operator timings at local scale and masks the exponents):
+    on the pair stage in isolation (the retired stress harness's
+    semdedup_pairs_exact/_ann legs, in git history — the shared
+    components loop dominates whole-operator timings at local scale
+    and masks the exponents):
     full-probe grew 16.1x over a x32 octave span while the nprobe=8 leg
     grew 1.52x — under the √n rule the probed fraction nprobe/c shrinks
     with the corpus, so the ANN pair stage stays near-flat where the

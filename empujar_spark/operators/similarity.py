@@ -544,16 +544,17 @@ def _argmin_euclidean_udf(centroids):
 
 
 # Above this k×dim the Arrow matmul kernel replaces the literal-matrix
-# expression in auto mode. MEASURED (STRESS_KMEANS.json, r13: k-octave
-# sweep at dim 64 over 32k rows, runs=3): the expression path's cost
-# grows linearly in k — 0.40s at k=8, 0.94s at k=32 (k×dim 2048),
-# 3.0s at k=128, 24.9s at k=1024 — because every row folds k dot
-# products AND the driver analyzes a k×dim literal, while the Arrow
-# kernel holds flat at ~0.3s (one BLAS matmul per batch, matrix shipped
-# once). At k×dim ≤ 1024 the two are within 2× and the expression buys
-# bit-exactness vs the SQL oracle with no Python-worker dependency, so
-# auto keeps it; from 2048 (the first octave where the expression is
-# 3.3× and climbing) auto flips to Arrow.
+# expression in auto mode. MEASURED (r13 k-octave sweep at dim 64 over
+# 32k rows, runs=3; retired stress harness, in git history): the
+# expression path's cost grows linearly in k — 0.40s at k=8, 0.94s at
+# k=32 (k×dim 2048), 3.0s at k=128, 24.9s at k=1024 — because every
+# row folds k dot products AND the driver analyzes a k×dim literal,
+# while the Arrow kernel holds flat at ~0.3s (one BLAS matmul per
+# batch, matrix shipped once). At k×dim ≤ 1024 the two are within 2×
+# and the expression buys bit-exactness vs the SQL oracle with no
+# Python-worker dependency, so auto keeps it; from 2048 (the first
+# octave where the expression is 3.3× and climbing) auto flips to
+# Arrow.
 _ARROW_ASSIGN_MIN_KXDIM = 2048
 
 

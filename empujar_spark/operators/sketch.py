@@ -276,9 +276,10 @@ def bloom_pruned_join(
     (``bloom_union`` folds at every append): missing keys would break
     the no-false-negative argument and silently drop matches.
 
-    PICKING THE PROBE (measured, STRESS_SKEW join_prune): when the
-    dim's DISTINCT KEY SET alone fits a broadcast, prefer the plain
-    JVM prune — ``fact.join(F.broadcast(dim.select(k).distinct()), k,
+    PICKING THE PROBE (measured by the retired skew stress harness's
+    join_prune sweep, in git history): when the dim's DISTINCT KEY
+    SET alone fits a broadcast, prefer the plain JVM prune —
+    ``fact.join(F.broadcast(dim.select(k).distinct()), k,
     "left_semi")`` before the real join — it stays in whole-stage
     codegen and never loses. This operator's bitmap is for the regime
     past that: a key set too large to broadcast still compresses to m
@@ -319,8 +320,8 @@ def bloom_pruned_join(
 
 
 # Above this many dim keys the broadcast key set stops being the cheap
-# option and the bitmap takes over. MEASURED (STRESS_SKEW
-# join_prune_keys, r12: a dim-KEY-COUNT octave sweep at fixed 10%
+# option and the bitmap takes over. MEASURED (r12, retired skew stress
+# harness, in git history: a dim-KEY-COUNT octave sweep at fixed 10%
 # selectivity, 10M-row wide fact, broadcast threshold off): the JVM
 # semi probe wins at 1M keys (3.6s vs bloom 6.5s vs raw 10.6s) and
 # still at 4M (4.1s vs 8.3s vs 6.1s); at 16M the key-set broadcast
@@ -343,7 +344,8 @@ def pruned_join(
     bloom: tuple[bytes, int, int] | None = None,
 ) -> DataFrame:
     """Runtime-filtered equi-join with the probe picked by the measured
-    rule (STRESS_SKEW join_prune; :func:`bloom_pruned_join` docstring):
+    rule (:data:`_SEMI_PRUNE_MAX_KEYS`; :func:`bloom_pruned_join`
+    docstring):
 
     - ``"semi"`` — broadcast the dim's DISTINCT KEY SET and left-semi
       the fact before the real join. Whole-stage-codegen JVM probe,

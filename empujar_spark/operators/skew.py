@@ -49,9 +49,10 @@ def salted_distinct_count(
     value of a key routes to one reducer); a hot key therefore serializes
     its whole distinct set on one core. Here that work is ``salt``-way
     parallel and the final merge input is pre-counted partials. Crossover
-    note (STRESS_SKEW.json): at 20M rows the one-reducer funnel is still
-    cheaper than this operator's extra shuffle — reach for it when the
-    hot key's distinct set, not the batch, is the scale problem."""
+    note (retired skew stress harness, in git history): at 20M rows the
+    one-reducer funnel is still cheaper than this operator's extra
+    shuffle — reach for it when the hot key's distinct set, not the
+    batch, is the scale problem."""
     partial = (
         df.withColumn("__vb", F.pmod(F.xxhash64(F.col(val)), F.lit(salt)))
         .groupBy(key, "__vb")

@@ -6925,31 +6925,8 @@ def _admission_pristine(spark, sf_dir) -> str:
     return _ADM_PRISTINE[key]
 
 
-_ADM_CLONES: list[str] = []
-
-
-def prepare_admission_clone(spark, sf_dir) -> None:
-    """Bench-side SETUP HOOK (ADVICE r11): the admission stream mutates
-    its warehouse, so every run drains against a throwaway copytree of
-    the pristine warehouse — but that clone is setup I/O, not the
-    steady-state probe/collect/epilogue cost the entry's docstring
-    claims to time. bench.py calls this OUTSIDE the timer before each
-    timed pass; the entry pops the prepared clone. The correctness
-    path (driver gate, pytest) never calls it and clones inline."""
-    import shutil
-
-    dst = _tmp_warehouse_dir("bloom-adm-")
-    shutil.copytree(
-        _admission_pristine(spark, sf_dir), dst, dirs_exist_ok=True
-    )
-    _ADM_CLONES.append(dst)
-
-
 def _admission_clone(spark, sf_dir) -> str:
-    """A throwaway admission warehouse: a bench-prepared clone if one
-    is pooled (see prepare_admission_clone), else cloned inline."""
-    if _ADM_CLONES:
-        return _ADM_CLONES.pop()
+    """A throwaway admission warehouse cloned from the pristine one."""
     import shutil
 
     dst = _tmp_warehouse_dir("bloom-adm-")
@@ -6988,20 +6965,14 @@ def streaming_bloom_admission(spark, sf_dir):
     copy; bloom false positives only route rows to the exact confirm),
     so the batch anti-join SQL is the EXACT oracle — the streaming form
     of bloom_ingest_dedup and the pretrain ingest chapter's steady
-    state. Bench note: the history ingest + initial bitmap build are
-    the amortized ingest-time cost every production admission gate
-    pays once (same rule as _neardup_stored_history /
-    _bm25_stored_index) — built ONCE per session as a pristine
-    warehouse and CLONED per run (the stream mutates its warehouse:
-    epilogue history append + bitmap re-commit, so timed runs drain
-    against a throwaway copy; the layout is relocatable — version
-    NUMBERS in the ``_current`` pointers, every path derived from
-    wh.path). What's timed is the steady state: per-batch probe +
-    collect, plus the once-per-drain append and pinned artifact
-    commit. In a bench run the clone itself is prepared by the
-    prepare_admission_clone setup hook OUTSIDE the timer — clone I/O
-    is neither ingest-time nor steady-state serving cost (ADVICE r11);
-    the correctness path clones inline."""
+    state. The history ingest + initial bitmap build are the amortized
+    ingest-time cost every production admission gate pays once (same
+    rule as _neardup_stored_history / _bm25_stored_index) — built ONCE
+    per session as a pristine warehouse and CLONED per call (the
+    stream mutates its warehouse: epilogue history append + bitmap
+    re-commit, so each call drains against a throwaway copy; the
+    layout is relocatable — version NUMBERS in the ``_current``
+    pointers, every path derived from wh.path)."""
     from empujar_spark.catalog import Warehouse
     from empujar_spark.indexes import IndexRegistry
     from empujar_spark.streaming import stream_ops as SO
@@ -9047,14 +9018,15 @@ def semantic_dedup_ann(spark, sf_dir):
     sub-quadratic serving plan the 100 TB semantic-dedup story actually
     runs (nobody full-probes at scale; the exact nprobe=n_centroids twin
     above stays the oracle-checked baseline). The regime claim is
-    MEASURED, not asserted (VERDICT r11 #2, STRESS_LOCAL
-    semdedup_pairs_*): on the pair stage alone — the two legs share the
-    components loop, which dominated the earlier whole-operator curves
-    and masked the exponents — exact full-probe grows 16.1x over a x32
-    octave span (6.7s -> 108.3s, quadratic once pair work dominates)
-    while the nprobe=8 twin grows 1.52x (2.9s -> 4.4s: under c ∝ √n the
-    probed fraction nprobe/c SHRINKS as the corpus grows, so the ANN leg
-    stays overhead-bound through x32). Approximate by construction: a
+    MEASURED, not asserted (VERDICT r11 #2; the retired stress
+    harness's semdedup_pairs_* legs, in git history): on the pair stage
+    alone — the two legs share the components loop, which dominated
+    the earlier whole-operator curves and masked the exponents — exact
+    full-probe grows 16.1x over a x32 octave span (6.7s -> 108.3s,
+    quadratic once pair work dominates) while the nprobe=8 twin grows
+    1.52x (2.9s -> 4.4s: under c ∝ √n the probed fraction nprobe/c
+    SHRINKS as the corpus grows, so the ANN leg stays overhead-bound
+    through x32). Approximate by construction: a
     missed pair can split a cluster, so recall < 1 is possible
     (measured: cluster-assignment overlap >= 0.9 vs the exact run at
     sf0.01, pinned in tests/test_similarity.py) -> rows-only. Same
@@ -9084,7 +9056,7 @@ def skew_salted_distinct(spark, sf_dir):
     key map-side, but a single count_distinct exchanges on KEY alone —
     every distinct value of the hot key lands on one reducer. At the
     20M-row harness scale that funnel still beats salting's extra
-    shuffle (STRESS_SKEW.json, the honest crossover note); at 100 TB a
+    shuffle (retired skew stress harness, in git history); at 100 TB a
     10B-row hot key makes the one-reducer dedup the job, which is what
     this operator exists to break up. Result identical to the plain
     plan — exact oracle."""
@@ -9584,9 +9556,10 @@ def kmeans_serve_arrow(spark, sf_dir):
     through the Arrow matmul kernel (operators/similarity.py
     kmeans_assign arrow=True) — the path auto mode dispatches to above
     the measured k×dim crossover (_ARROW_ASSIGN_MIN_KXDIM = 2048:
-    STRESS_KMEANS.json shows the literal-matrix expression growing
-    linearly in k, 0.40s→24.9s from k=8→1024 at dim 64 over 32k rows,
-    while the Arrow kernel holds flat ~0.3s). Same oracle as
+    the r13 k-octave sweep of the retired stress harness, in git
+    history, shows the literal-matrix expression growing linearly in k,
+    0.40s→24.9s from k=8→1024 at dim 64 over 32k rows, while the Arrow
+    kernel holds flat ~0.3s). Same oracle as
     kmeans_serve: BLAS float64 association can only flip an exact
     inter-centroid tie, which both paths break toward the smaller
     centroid id — so the assignment is hash-exact on real data (parity

@@ -146,7 +146,7 @@ class DocumentIndex:
             self.register(index, data)  # infers the date-column cache once
             return data
         existing = self._indices[index]
-        deduped = Warehouse._dedup_last_wins(data, key)
+        deduped = Warehouse._dedup_batch(data, key)
         kept = existing.join(F.broadcast(deduped.select(key)), on=key, how="left_anti")
         # localCheckpoint (lazy) caps the per-insert lineage growth — an
         # ingest loop would otherwise accrete one anti-join + union of

@@ -751,7 +751,7 @@ def test_kmeans_seed_quantization_rounds_half_up(spark):
 
 def test_kmeans_assign_auto_dispatches_on_kxdim(spark, monkeypatch):
     """arrow=None picks the path by the measured k×dim rule
-    (_ARROW_ASSIGN_MIN_KXDIM, STRESS_KMEANS.json): literal expression
+    (_ARROW_ASSIGN_MIN_KXDIM, the r13 k-octave sweep): literal expression
     below the crossover, Arrow kernel at/above it."""
     df = spark.createDataFrame(
         [(1, [0.0, 1.0])], "vec_id bigint, embedding array<double>"

@@ -67,12 +67,40 @@ def test_salted_distinct_count_null_vals(spark):
     assert got == {"a": 2, "b": 1}  # NULL val not counted, like COUNT(DISTINCT)
 
 
+def zipf_df(spark, n_rows: int, n_keys: int, s: float):
+    """Rows with ``key`` ~ a BOUNDED power law on 1..n_keys (the Zipf
+    shape, s > 1), generated entirely JVM-side via the exact inverse CDF
+    of the continuous bounded analogue: X on [1, n_keys+1) with density
+    ∝ x^-s, key = floor(X) — key k carries mass ∝ ∫ₖ^{k+1} x^-s dx,
+    strictly decreasing in k. Exact bounded sampling, so NO truncation
+    fold: an unbounded inverse CDF clamps its tail onto key ``n_keys``,
+    which at s=1.05 makes the clamp key the hottest (56% of all rows)
+    and hot-key share NON-monotone in s — this form keeps key 1 the
+    unique mode and hot-key share monotone increasing in s. ``s == 0``
+    gives the uniform control. README.md's skew curves were measured on
+    this generator."""
+    if 0 < s <= 1:
+        # s = 1 is the inverse-CDF singularity (1/(1-s) blows up) and
+        # 0 < s < 1 is a sub-Zipf skew the curves don't model; keep the
+        # domain honest instead of silently producing near-uniform data.
+        raise ValueError(f"zipf_df needs s > 1 (or 0 for uniform); got {s}")
+    df = spark.range(n_rows).repartition(32)
+    if s <= 0:
+        key = (F.floor(F.rand(0) * n_keys) + 1).cast("long")
+    else:
+        # bounded-Pareto inverse CDF on [1, L+1): H = (L+1)^(1-s),
+        # X = (1 - u·(1 - H))^(1/(1-s)); u<1 keeps X < L+1, the least()
+        # only guards the floating-point boundary
+        H = float((n_keys + 1) ** (1.0 - s))
+        x = F.pow(
+            F.lit(1.0) - F.rand(0) * F.lit(1.0 - H),
+            F.lit(1.0 / (1.0 - s)),
+        )
+        key = F.least(F.floor(x), F.lit(n_keys)).cast("long")
+    return df.select(key.alias("key"))
+
+
 def test_zipf_generator_is_skewed_and_bounded(spark):
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/scripts")
-    from stress_skew import zipf_df
-
     df = zipf_df(spark, 50_000, 1_000, 1.2)
     counts = {r.key: r["count"] for r in df.groupBy("key").count().collect()}
     assert min(counts) >= 1 and max(counts.keys()) <= 1_000
@@ -84,12 +112,7 @@ def test_zipf_generator_is_skewed_and_bounded(spark):
 
 
 def test_zipf_generator_rejects_degenerate_exponent(spark):
-    import sys as _sys
-
     import pytest as _pytest
-
-    _sys.path.insert(0, "/root/repo/scripts")
-    from stress_skew import zipf_df
 
     with _pytest.raises(ValueError, match="s > 1"):
         zipf_df(spark, 100, 10, 0.9)
@@ -101,11 +124,6 @@ def test_zipf_hot_key_share_monotone_in_s(spark):
     and hot-key share non-monotone in s. The bounded-Pareto form samples
     1..n_keys exactly: key 1 is the unique mode and the hot share rises
     with s, so the published skew curves are self-describing again."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo/scripts")
-    from stress_skew import zipf_df
-
     shares = []
     for s in (1.05, 1.2, 1.5):
         df = zipf_df(spark, 200_000, 100_000, s)

@@ -98,6 +98,13 @@ def test_es_upsert_create_then_update(spark, es):
                              {"id": 9, "email": "new@user.com"}])
     out = {r["id"]: r["email"] for r in es.get_all("users", fields=["id", "email"]).collect()}
     assert out[0] == "evan@new.com" and out[9] == "new@user.com" and len(out) == 4
+    # one batch repeating an id: the later row wins, and the index keeps
+    # one row for that id
+    es.insert_data("users", [{"id": 1, "email": "first@dup.com"},
+                             {"id": 1, "email": "second@dup.com"}])
+    rows = es.get_all("users", fields=["id", "email"]).collect()
+    assert [r["email"] for r in rows if r["id"] == 1] == ["second@dup.com"]
+    assert len(rows) == 4
 
 
 # ------------------------------------------------------------------ JdbcSource
