@@ -32,12 +32,13 @@ Scale design (100 TB stance):
   batch, written with its meta to a fresh ``data-v{N}`` dir and
   committed by an atomic ``_current`` pointer flip, so the existing
   table is scanned once with no shuffle and every read is an
-  explicit-schema scan (no footer inference job). The batch is used
-  three times (count, key broadcast, union). Only a distributed batch
-  is cached, so its source chain runs once; a driver-held batch (row
-  dicts, local relations) is re-evaluated from driver memory, because
-  a cached plan keeps all ``shuffle.partitions`` partitions of its
-  dedup shuffle and would add that many files to every commit.
+  explicit-schema scan (no footer inference job). A distributed batch
+  is used three times (count, key broadcast, union) and is cached, so
+  its source chain runs once. A driver-held batch (row dicts, local
+  relations) is planned from its keys on the driver, with no job: they
+  give the count and show whether the dedup window must run at all.
+  Its commit is two Spark jobs, the key broadcast and the rewrite, and
+  a small one adds one file.
 - ``get_max`` reads ``long``/``timestamp`` maxima from the parquet
   footer statistics of the current version: no Spark job.
 - Physical layout is a table property: the optional ``layout`` field of
@@ -440,18 +441,18 @@ class Warehouse:
                 f.name: lattice.from_spark_type(f.dataType, self.varchar_length)
                 for f in data.schema.fields
             }
-            df = data
-            # honor lattice physical types (e.g. int→long) for merge stability
-            casts = []
+            # honor lattice physical types (e.g. int→long) for merge
+            # stability; a frame that already has them is returned as is
+            casts, cast_any = [], False
             for f in data.schema.fields:
                 target = incoming[f.name]
                 phys = T.StringType() if target.kind == UNKNOWN else target.to_spark()
-                casts.append(
-                    F.col(f.name).cast(phys).alias(f.name)
-                    if f.dataType != phys
-                    else F.col(f.name)
-                )
-            return df.select(*casts), incoming
+                if f.dataType != phys:
+                    casts.append(F.col(f.name).cast(phys).alias(f.name))
+                    cast_any = True
+                else:
+                    casts.append(F.col(f.name))
+            return (data.select(*casts) if cast_any else data), incoming
         rows = list(data)
         incoming = lattice.infer_column_types(rows, self.varchar_length)
         if existing:
@@ -639,14 +640,21 @@ class Warehouse:
 
     def _conform(self, df: DataFrame, meta: dict) -> DataFrame:
         """Cast/extend a DataFrame to the table's physical schema:
-        missing columns → NULL, unknown columns → NULL strings."""
+        missing columns → NULL, unknown columns → NULL strings. Only the
+        columns whose type differs are cast, and a frame that already has
+        the schema, in order, is returned as is."""
         phys = self._physical_schema(meta)
+        have = {f.name: f.dataType for f in df.schema.fields}
+        if list(have.items()) == [(f.name, f.dataType) for f in phys.fields]:
+            return df
         cols = []
         for f in phys.fields:
-            if f.name in df.columns:
+            if f.name not in have:
+                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+            elif have[f.name] != f.dataType:
                 cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
             else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+                cols.append(F.col(f.name))
         return df.select(*cols)
 
     def insert_data(
@@ -671,6 +679,8 @@ class Warehouse:
         names the column that DEFINES first/last — pass it whenever
         ``data`` is a DataFrame that has been shuffled (see _dedup_batch).
         Returns the number of incoming rows written."""
+        if dedup_keep not in ("first", "last"):
+            raise ValueError(f"dedup_keep must be 'first' or 'last', got {dedup_keep!r}")
         key = _as_key_list(merge_key or self.primary_key)
         if not self.table_exists(table):
             existing_types = None
@@ -690,48 +700,70 @@ class Warehouse:
             return self._write(table, df, self._new_meta(table, incoming))
 
         # read existing under the OLD physical schema (the lazy plan captures
-        # it before files are swapped), then reconcile + cast both sides
-        existing_raw = self.read(table)
+        # it before files are swapped), then reconcile + cast both sides;
+        # a scan whose meta columns the commit leaves unchanged already
+        # has the physical schema, so _conform returns it as is
+        existing = self.read(table)
         meta = self._reconcile_schema(table, incoming)
         new_df = self._conform(df, meta)
-        existing = self._conform(existing_raw, meta)
-
+        existing = self._conform(existing, meta)
         table_cols = [c["name"] for c in meta["columns"]]
-        if merge_on_duplicates and all(k in table_cols for k in key):
-            new_df = self._dedup_batch(
-                new_df, key, keep=dedup_keep, order_col=dedup_order_col
+        merge = merge_on_duplicates and all(k in table_cols for k in key)
+
+        # checked here, since a batch of unique keys never plans the
+        # window that would reject it
+        if merge and dedup_order_col is not None and dedup_order_col not in table_cols:
+            raise ValueError(f"dedup_order_col {dedup_order_col!r} is not a column")
+
+        def dedup(frame: DataFrame) -> DataFrame:
+            return self._dedup_batch(
+                frame, key, keep=dedup_keep, order_col=dedup_order_col
             )
-        # The batch is evaluated three times: the count job, the
-        # broadcast key build and the union side of the copy-on-write
-        # rewrite. A distributed batch is cached so its source chain
-        # (scan, joins, conform casts, the dedup window's shuffle) runs
-        # once. A driver-held batch (row dicts, or a local relation such
-        # as createDataFrame(pandas)) is re-evaluated from driver memory
-        # instead, because a cached plan's partitioning is fixed before
-        # AQE coalescing (Spark leaves
-        # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning off):
-        # a cached small batch keeps all spark.sql.shuffle.partitions
-        # partitions and writes that many tiny files, where the uncached
-        # one coalesces to one partition and one file. Asked of ``data``
-        # itself: a select over a local relation is no longer local.
+
+        # Asked of ``data`` itself: a select over a local relation is no
+        # longer local.
         distributed = isinstance(data, DataFrame) and not data.isLocal()
         if distributed:
-            new_df = new_df.persist()
-        try:
-            n = new_df.count()
-            if merge_on_duplicates and all(k in table_cols for k in key):
-                # broadcast the (typically small) incremental batch for
-                # the anti-join so the big stored table never shuffles
-                kept = existing.join(
-                    F.broadcast(new_df.select(*key)), on=key, how="left_anti"
-                )
-                result = kept.unionByName(new_df)
+            # The batch is used three times: the count, the broadcast key
+            # build and the union side of the copy-on-write rewrite, so
+            # it is cached and its source chain (scan, joins, conform
+            # casts, the dedup window's shuffle) runs once.
+            batch = keys = (dedup(new_df) if merge else new_df).persist()
+        else:
+            # A driver-held batch (row dicts, or a local relation such as
+            # createDataFrame(pandas)) is planned from its keys, collected
+            # on the driver with no Spark job: they give the count and
+            # show whether the batch repeats a key. Only a batch that
+            # does runs the dedup window, uncached, so AQE coalesces its
+            # shuffle to the advisory partition size (a cached plan would
+            # keep all spark.sql.shuffle.partitions partitions: Spark
+            # leaves spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
+            # off). A batch of unique keys has no shuffle, and its
+            # LocalTableScan would split into defaultParallelism
+            # partitions, so it is coalesced to one partition, one file,
+            # per _LOCAL_BATCH_ROWS_PER_FILE rows. The anti-join
+            # broadcasts the raw batch's keys (the same key set), so the
+            # window never runs twice. What is left is the broadcast job
+            # and the rewrite.
+            n, unique = _key_groups(new_df, key if merge else [])
+            if unique:
+                batch = new_df.coalesce(-(-n // _LOCAL_BATCH_ROWS_PER_FILE) or 1)
             else:
-                result = existing.unionByName(new_df)
-            self._write(table, result, meta)
+                batch = dedup(new_df)
+            keys = new_df
+        try:
+            if distributed:
+                n = batch.count()
+            if merge:
+                # broadcast the (typically small) incremental batch's keys
+                # for the anti-join so the big stored table never shuffles
+                existing = existing.join(
+                    F.broadcast(keys.select(*key)), on=key, how="left_anti"
+                )
+            self._write(table, existing.unionByName(batch), meta)
         finally:
             if distributed:
-                new_df.unpersist()
+                batch.unpersist()
         return n
 
     def replace_table(self, table: str, data, layout: dict | None = None) -> int:
@@ -1685,6 +1717,37 @@ def _as_micros(dt: T.DataType) -> T.DataType:
     if isinstance(dt, T.ArrayType):
         return T.ArrayType(_as_micros(dt.elementType))
     return dt
+
+
+# rows per file of a driver-held upsert batch with unique keys: the 64 MB
+# advisory partition size AQE gives a shuffled batch, at 256 bytes a row
+_LOCAL_BATCH_ROWS_PER_FILE = 1 << 18
+
+_NAN = object()  # the one group Spark puts every NaN key in
+
+
+def _group_value(v):
+    """A collected key value as Spark groups it: NaN equals NaN, and
+    arrays and binary values are hashable."""
+    if isinstance(v, float) and v != v:
+        return _NAN
+    if isinstance(v, list):
+        return tuple(_group_value(x) for x in v)
+    if isinstance(v, bytearray):
+        return bytes(v)
+    return v
+
+
+def _key_groups(batch: DataFrame, key: list[str]) -> tuple[int, bool]:
+    """Of a driver-held batch, read with a collect of its ``key``
+    columns, which a local relation serves on the driver with no Spark
+    job: the number of groups they form the way Spark groups them (NULL
+    with NULL, NaN with NaN), or the row count when ``key`` is empty;
+    and whether every group is one row, so the batch needs no dedup
+    window."""
+    rows = batch.select(*key).collect()
+    groups = {tuple(_group_value(v) for v in r) for r in rows} if key else rows
+    return len(groups), len(groups) == len(rows)
 
 
 def _as_key_list(key: str | list[str]) -> list[str]:

@@ -142,12 +142,21 @@ class DocumentIndex:
             data = self.spark.createDataFrame(
                 tuples, lattice.to_struct_type(col_types)
             )
+        # a batch that repeats an id keeps its last row, whether it
+        # creates the index or updates it
+        deduped = (
+            Warehouse._dedup_batch(data, key) if key in data.columns else data
+        )
         if index not in self._indices:
-            self.register(index, data)  # infers the date-column cache once
-            return data
+            # checkpointed like a merged index below, so the dedup window
+            # runs once and the surviving row of a repeated id stays fixed
+            created = deduped.localCheckpoint(eager=False)
+            self.register(index, created)  # infers the date-column cache once
+            return created
         existing = self._indices[index]
-        deduped = Warehouse._dedup_batch(data, key)
-        kept = existing.join(F.broadcast(deduped.select(key)), on=key, how="left_anti")
+        # the raw batch's keys are the deduped batch's: broadcasting them
+        # keeps the dedup window out of the broadcast build
+        kept = existing.join(F.broadcast(data.select(key)), on=key, how="left_anti")
         # localCheckpoint (lazy) caps the per-insert lineage growth — an
         # ingest loop would otherwise accrete one anti-join + union of
         # plan per batch until analysis cost or driver memory blows up

@@ -105,6 +105,9 @@ def test_es_upsert_create_then_update(spark, es):
     rows = es.get_all("users", fields=["id", "email"]).collect()
     assert [r["email"] for r in rows if r["id"] == 1] == ["second@dup.com"]
     assert len(rows) == 4
+    # the same batch creating a fresh index keeps one row too
+    es.insert_data("fresh", [{"id": 1, "email": "a"}, {"id": 1, "email": "b"}])
+    assert [tuple(r) for r in es.get_all("fresh").collect()] == [(1, "b")]
 
 
 # ------------------------------------------------------------------ JdbcSource

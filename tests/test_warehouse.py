@@ -624,6 +624,12 @@ def test_insert_data_dedup_keep_first_and_last(spark, tmp_path):
     assert {r["id"]: r["v"] for r in wh_first.read("t").collect()} == {
         1: "a", 2: "x", 3: "z",
     }
+    # a batch of unique keys plans no dedup window, yet bad dedup
+    # arguments are still rejected
+    with pytest.raises(ValueError):
+        wh_first.insert_data("t", [{"id": 9, "v": "q"}], dedup_keep="middle")
+    with pytest.raises(ValueError):
+        wh_first.insert_data("t", [{"id": 9, "v": "q"}], dedup_order_col="nope")
 
 
 def test_dump_logs_progress_cadence(spark, tmp_path):
@@ -1460,3 +1466,138 @@ def test_read_after_commit_runs_no_spark_job(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert df.count() == 1
+
+
+def _jobs_of(spark, fn):
+    """``fn()`` and the number of Spark jobs it issued."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(list(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def test_driver_held_upsert_runs_two_jobs(warehouse, spark):
+    """A driver-held batch is planned from its keys on the driver: a
+    2,000-row upsert into an existing table issues at most two Spark jobs
+    (the key broadcast and the rewrite), returns its distinct-key count
+    and adds at most one file."""
+    warehouse.insert_data("t", [{"id": i, "v": f"a{i}"} for i in range(3000)])
+    rows = [{"id": i, "v": f"b{i}"} for i in range(2000, 4000)]
+    pdf = spark.createDataFrame(
+        pd.DataFrame({"id": range(3000, 5000), "v": [f"c{i}" for i in range(3000, 5000)]})
+    )
+    assert pdf.isLocal()
+    for batch in (rows, pdf):
+        before = n_files(warehouse, "t")
+        n, jobs = _jobs_of(spark, lambda: warehouse.insert_data("t", batch))
+        assert n == 2000
+        assert jobs <= 2
+        assert n_files(warehouse, "t") <= before + 1
+    data = rows_by_id(warehouse, "t")
+    assert len(data) == 5000
+    assert [data[i]["v"] for i in (1999, 2000, 2999, 3000, 4999)] == [
+        "a1999", "b2000", "b2999", "c3000", "c4999"]
+
+
+def test_driver_held_upsert_files_follow_batch_size(warehouse, spark, monkeypatch):
+    """A driver-held batch of unique keys is written as one file per
+    ``_LOCAL_BATCH_ROWS_PER_FILE`` rows, so a large batch is not one task;
+    a batch that repeats a key is sized by AQE after its dedup shuffle."""
+    from empujar_spark import catalog
+
+    monkeypatch.setattr(catalog, "_LOCAL_BATCH_ROWS_PER_FILE", 500)
+    warehouse.insert_data("t", [{"id": -1, "v": "x"}])
+    assert n_files(warehouse, "t") == 1
+    assert warehouse.insert_data("t", [{"id": i, "v": "a"} for i in range(2000)]) == 2000
+    grown = n_files(warehouse, "t")
+    assert grown == 1 + min(4, spark.sparkContext.defaultParallelism)
+    repeated = [{"id": i % 1000, "v": "b"} for i in range(2000)]
+    assert warehouse.insert_data("t", repeated) == 1000
+    assert n_files(warehouse, "t") <= grown + 1
+    assert len(rows_by_id(warehouse, "t")) == 2001
+
+
+_UPSERT_CASES = {
+    # name: (stored rows, batch rows, insert_data kwargs, expected return,
+    #        whether row position decides the outcome,
+    #        (a column, its sorted values after the upsert))
+    "keep-first": (
+        [{"id": 1, "v": "old"}, {"id": 2, "v": "old"}],
+        [{"id": 1, "v": "a"}, {"id": 1, "v": "b"}, {"id": 3, "v": "c"}, {"id": 3, "v": "d"}],
+        {"dedup_keep": "first"}, 2, True, ("v", ["a", "c", "old"])),
+    "keep-last": (
+        [{"id": 1, "v": "old"}, {"id": 2, "v": "old"}],
+        [{"id": 1, "v": "a"}, {"id": 1, "v": "b"}, {"id": 3, "v": "c"}, {"id": 3, "v": "d"}],
+        {"dedup_keep": "last"}, 2, True, ("v", ["b", "d", "old"])),
+    "order-col": (
+        [{"id": 1, "v": "old", "ts": 0}],
+        [{"id": 1, "v": "a", "ts": 2}, {"id": 1, "v": "b", "ts": 1},
+         {"id": 2, "v": "c", "ts": 1}, {"id": 2, "v": "d", "ts": 3}],
+        {"dedup_order_col": "ts"}, 2, False, ("v", ["a", "d"])),
+    # NULL keys group together in the batch but never match a stored NULL
+    "null-keys": (
+        [{"id": None, "v": "stored", "ts": 0}, {"id": 1, "v": "old", "ts": 0}],
+        [{"id": None, "v": "n1", "ts": 1}, {"id": None, "v": "n2", "ts": 2},
+         {"id": 1, "v": "new", "ts": 1}],
+        {"dedup_order_col": "ts"}, 2, False, ("v", ["n2", "new", "stored"])),
+    # NaN keys (distinct float objects) group together and match a
+    # stored NaN
+    "nan-key": (
+        [{"k": float("nan"), "v": "old", "ts": 0}, {"k": 1.0, "v": "old", "ts": 0}],
+        [{"k": float("nan"), "v": "n1", "ts": 1}, {"k": float("nan"), "v": "n2", "ts": 2},
+         {"k": 2.0, "v": "new", "ts": 1}],
+        {"merge_key": "k", "dedup_order_col": "ts"}, 2, False, ("v", ["n2", "new", "old"])),
+    "composite-key": (
+        [{"a": 1, "b": "x", "v": 1}, {"a": 1, "b": "y", "v": 2}],
+        [{"a": 1, "b": "x", "v": 10}, {"a": 2, "b": "x", "v": 20}],
+        {"merge_key": ["a", "b"]}, 2, False, ("v", [2, 10, 20])),
+    "new-column": (
+        [{"id": 1, "v": "old"}, {"id": 2, "v": "old"}],
+        [{"id": 2, "v": "new", "w": 7}, {"id": 3, "v": "new", "w": 8}],
+        {}, 2, False, ("w", [7, 8, None])),
+    "int-to-float": (
+        [{"id": 1, "n": 2}, {"id": 2, "n": 3}],
+        [{"id": 2, "n": 3.5}, {"id": 3, "n": 4.5}],
+        {}, 2, False, ("n", [2.0, 3.5, 4.5])),
+    "append": (
+        [{"id": 1, "v": "old"}],
+        [{"id": 1, "v": "a"}, {"id": 1, "v": "b"}, {"id": 2, "v": "c"}],
+        {"merge_on_duplicates": False}, 3, False, ("v", ["a", "b", "c", "old"])),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_UPSERT_CASES))
+def test_driver_held_upsert_equals_distributed(spark, tmp_path, case):
+    """The driver-held plan (keys read on the driver, dedup window only
+    for repeated keys) gives the table and return value the
+    distributed persist-and-count plan gives, for row dicts and for a
+    local relation. The distributed batch is the local one through
+    ``repartition(2)``, except where row position decides which
+    duplicate survives: a shuffle leaves position undefined, so there it
+    is an order-keeping RDD scan."""
+    import pyarrow as pa
+
+    from empujar_spark.catalog import Warehouse
+
+    stored, rows, kwargs, expect_n, by_position, (col, values) = _UPSERT_CASES[case]
+    local = spark.createDataFrame(pa.Table.from_pylist(rows))
+    if by_position:
+        distributed = spark.createDataFrame(rows, local.schema)
+    else:
+        distributed = local.repartition(2)
+    assert local.isLocal() and not distributed.isLocal()
+    tables = []
+    for name, batch in [("rows", rows), ("local", local), ("distributed", distributed)]:
+        wh = Warehouse(spark, str(tmp_path / name), primary_key="id")
+        wh.insert_data("t", stored, merge_key=kwargs.get("merge_key"))
+        assert wh.insert_data("t", batch, **kwargs) == expect_n, name
+        table = wh.read("t").collect()
+        assert sorted((r[col] for r in table), key=repr) == sorted(values, key=repr), name
+        tables.append(sorted(repr(r) for r in table))  # repr: NaN never equals itself
+    assert tables[0] == tables[1] == tables[2]
