@@ -47,14 +47,13 @@ def chapter_loader(book):
         # from a renamed/removed check would otherwise fail the gate
         # forever (or a historical pass could mask a current failure the
         # merge didn't overwrite). The audit rows are tiny (one per
-        # check), so collect them once and reuse for both persist + gate.
-        rows = audit.collect()
+        # check), so collect them once and reuse for both persist + gate;
+        # as an Arrow table they upsert as a driver-local relation.
+        rows = audit.toArrow()
         wh.insert_data(
-            "quality_audit",
-            book.spark.createDataFrame(rows, audit.schema),
-            merge_key="check",
+            "quality_audit", book.spark.createDataFrame(rows), merge_key="check"
         )
-        failed = [r.check for r in rows if r.passed != 1]
+        failed = [r["check"] for r in rows.to_pylist() if r["passed"] != 1]
         if failed:
             raise ValueError(f"quality gate failed: {failed}")
 

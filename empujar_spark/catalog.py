@@ -32,13 +32,13 @@ Scale design (100 TB stance):
   batch, written with its meta to a fresh ``data-v{N}`` dir and
   committed by an atomic ``_current`` pointer flip, so the existing
   table is scanned once with no shuffle and every read is an
-  explicit-schema scan (no footer inference job). A distributed batch
-  is used three times (count, key broadcast, union) and is cached, so
-  its source chain runs once. A driver-held batch (row dicts, local
-  relations) is planned from its keys on the driver, with no job: they
-  give the count and show whether the dedup window must run at all.
-  Its commit is two Spark jobs, the key broadcast and the rewrite, and
-  a small one adds one file.
+  explicit-schema scan (no footer inference job). A distributed upsert
+  batch is used three times (count, key broadcast, union) and is
+  cached, so its source chain runs once. Creates and upserts share one
+  batch plan: a driver-held batch (row dicts, local relations, also in
+  ``DocumentIndex``) is planned from its keys on the driver, with no
+  job; they give the count and show whether the dedup window must run.
+  A small one adds one file, in one Spark job on create, two on upsert.
 - ``get_max`` reads ``long``/``timestamp`` maxima from the parquet
   footer statistics of the current version: no Spark job.
 - Physical layout is a table property: the optional ``layout`` field of
@@ -678,85 +678,61 @@ class Warehouse:
         insert-order guard, snowflake.js:617-636). ``dedup_order_col``
         names the column that DEFINES first/last — pass it whenever
         ``data`` is a DataFrame that has been shuffled (see _dedup_batch).
+        For creates and upserts alike, a driver-held batch's keys, read on
+        the driver, decide whether the dedup window runs (_plan_batch).
         Returns the number of incoming rows written."""
         if dedup_keep not in ("first", "last"):
             raise ValueError(f"dedup_keep must be 'first' or 'last', got {dedup_keep!r}")
         key = _as_key_list(merge_key or self.primary_key)
-        if not self.table_exists(table):
-            existing_types = None
-        else:
-            existing_types = self.column_types(table)
-        df, incoming = self._normalize_input(data, existing_types)
+        exists = self.table_exists(table)
+        df, incoming = self._normalize_input(
+            data, self.column_types(table) if exists else None
+        )
         if not df.columns:
             return 0
-        if not self.table_exists(table):
-            # upsert semantics still apply within the creating batch itself
-            if merge_on_duplicates and all(k in incoming for k in key):
-                df = self._dedup_batch(
-                    df, key, keep=dedup_keep, order_col=dedup_order_col
-                )
-            # the commit records the exact footer row count; a separate
-            # count job would recompute the same number
-            return self._write(table, df, self._new_meta(table, incoming))
-
-        # read existing under the OLD physical schema (the lazy plan captures
-        # it before files are swapped), then reconcile + cast both sides;
-        # a scan whose meta columns the commit leaves unchanged already
-        # has the physical schema, so _conform returns it as is
-        existing = self.read(table)
-        meta = self._reconcile_schema(table, incoming)
-        new_df = self._conform(df, meta)
-        existing = self._conform(existing, meta)
+        if exists:
+            # read existing under the OLD physical schema (the lazy plan
+            # captures it before files are swapped), then reconcile + cast
+            # both sides; a scan whose meta columns the commit leaves
+            # unchanged already has the physical schema, so _conform
+            # returns it as is
+            existing = self.read(table)
+            meta = self._reconcile_schema(table, incoming)
+            df = self._conform(df, meta)
+            existing = self._conform(existing, meta)
+        else:
+            meta = self._new_meta(table, incoming)
         table_cols = [c["name"] for c in meta["columns"]]
+        # upsert semantics apply within a creating batch too
         merge = merge_on_duplicates and all(k in table_cols for k in key)
-
         # checked here, since a batch of unique keys never plans the
         # window that would reject it
         if merge and dedup_order_col is not None and dedup_order_col not in table_cols:
             raise ValueError(f"dedup_order_col {dedup_order_col!r} is not a column")
 
-        def dedup(frame: DataFrame) -> DataFrame:
-            return self._dedup_batch(
-                frame, key, keep=dedup_keep, order_col=dedup_order_col
-            )
-
         # Asked of ``data`` itself: a select over a local relation is no
         # longer local.
         distributed = isinstance(data, DataFrame) and not data.isLocal()
-        if distributed:
-            # The batch is used three times: the count, the broadcast key
-            # build and the union side of the copy-on-write rewrite, so
-            # it is cached and its source chain (scan, joins, conform
-            # casts, the dedup window's shuffle) runs once.
-            batch = keys = (dedup(new_df) if merge else new_df).persist()
-        else:
-            # A driver-held batch (row dicts, or a local relation such as
-            # createDataFrame(pandas)) is planned from its keys, collected
-            # on the driver with no Spark job: they give the count and
-            # show whether the batch repeats a key. Only a batch that
-            # does runs the dedup window, uncached, so AQE coalesces its
-            # shuffle to the advisory partition size (a cached plan would
-            # keep all spark.sql.shuffle.partitions partitions: Spark
-            # leaves spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
-            # off). A batch of unique keys has no shuffle, and its
-            # LocalTableScan would split into defaultParallelism
-            # partitions, so it is coalesced to one partition, one file,
-            # per _LOCAL_BATCH_ROWS_PER_FILE rows. The anti-join
-            # broadcasts the raw batch's keys (the same key set), so the
-            # window never runs twice. What is left is the broadcast job
-            # and the rewrite.
-            n, unique = _key_groups(new_df, key if merge else [])
-            if unique:
-                batch = new_df.coalesce(-(-n // _LOCAL_BATCH_ROWS_PER_FILE) or 1)
-            else:
-                batch = dedup(new_df)
-            keys = new_df
+        batch, n = _plan_batch(
+            df, key if merge else [], not distributed, dedup_keep, dedup_order_col
+        )
+        if not exists:
+            # the commit records the exact footer row count; a separate
+            # count job would recompute the same number
+            return self._write(table, batch, meta)
+
+        # A distributed upsert batch is used three times (count, key
+        # broadcast, union), so it is cached and its source chain runs
+        # once. A driver-held one is not (a cached plan keeps every shuffle
+        # partition), and its anti-join broadcasts the raw batch's keys,
+        # the same key set, so the window never runs twice.
         try:
             if distributed:
-                n = batch.count()
+                n = batch.persist().count()
             if merge:
                 # broadcast the (typically small) incremental batch's keys
                 # for the anti-join so the big stored table never shuffles
+                keys = batch if distributed else df
                 existing = existing.join(
                     F.broadcast(keys.select(*key)), on=key, how="left_anti"
                 )
@@ -826,20 +802,17 @@ class Warehouse:
         a DataFrame that has been shuffled (join/groupBy reorder rows, so
         monotonically_increasing_id() encodes an arbitrary partition
         layout). Shuffled inputs must pass ``order_col``."""
-        if keep not in ("first", "last"):
-            raise ValueError(f"keep must be 'first' or 'last', got {keep!r}")
         last = keep == "last"
-        pos = F.col("__pos").desc() if last else F.col("__pos").asc()
-        order = [pos]
+        pos = F.monotonically_increasing_id()
+        order = [pos.desc() if last else pos.asc()]
         if order_col is not None:
             o = F.col(order_col)
-            order = [o.desc_nulls_last() if last else o.asc_nulls_first(), pos]
+            order.insert(0, o.desc_nulls_last() if last else o.asc_nulls_first())
         w = Window.partitionBy(*_as_key_list(key)).orderBy(*order)
         return (
-            df.withColumn("__pos", F.monotonically_increasing_id())
-            .withColumn("__rn", F.row_number().over(w))
+            df.select("*", F.row_number().over(w).alias("__rn"))
             .filter(F.col("__rn") == 1)
-            .drop("__pos", "__rn")
+            .drop("__rn")
         )
 
     def merge_scd2(
@@ -1719,7 +1692,7 @@ def _as_micros(dt: T.DataType) -> T.DataType:
     return dt
 
 
-# rows per file of a driver-held upsert batch with unique keys: the 64 MB
+# rows per file of a driver-held batch with unique keys: the 64 MB
 # advisory partition size AQE gives a shuffled batch, at 256 bytes a row
 _LOCAL_BATCH_ROWS_PER_FILE = 1 << 18
 
@@ -1748,6 +1721,33 @@ def _key_groups(batch: DataFrame, key: list[str]) -> tuple[int, bool]:
     rows = batch.select(*key).collect()
     groups = {tuple(_group_value(v) for v in r) for r in rows} if key else rows
     return len(groups), len(groups) == len(rows)
+
+
+def _plan_batch(
+    df: DataFrame,
+    key: list[str],
+    local: bool,
+    keep: str = "last",
+    order_col: str | None = None,
+) -> tuple[DataFrame, int | None]:
+    """The batch to write for ``df``, deduplicated on ``key`` (not at all
+    when empty), and its key-group count (None when not ``local``).
+
+    A driver-held (``local``) batch is planned from its keys, collected
+    on the driver with no Spark job: only one that repeats a key runs the
+    dedup window. One of unique keys has no shuffle, and its
+    LocalTableScan would split into ``defaultParallelism`` partitions, so
+    it is coalesced to one partition, one file, per
+    ``_LOCAL_BATCH_ROWS_PER_FILE`` rows. The window runs uncached, so AQE
+    coalesces its shuffle to the advisory partition size."""
+    n = None
+    if local:
+        n, unique = _key_groups(df, key)
+        if unique:
+            return df.coalesce(-(-n // _LOCAL_BATCH_ROWS_PER_FILE) or 1), n
+    if key:
+        df = Warehouse._dedup_batch(df, key, keep=keep, order_col=order_col)
+    return df, n
 
 
 def _as_key_list(key: str | list[str]) -> list[str]:

@@ -12,8 +12,7 @@ Reference semantics (lib/chapter.js):
 
 Spark mapping: pages execute in a ThreadPoolExecutor — the Spark scheduler
 is thread-safe, so concurrent pages submit concurrent Spark actions (the
-cluster is the real parallelism boundary). A FAIR scheduler pool per page
-keeps one long job from starving the rest, and a job group
+cluster is the real parallelism boundary). A job group
 ``book/chapter/page`` per page attributes each Spark job to its page.
 """
 
@@ -125,10 +124,8 @@ class Chapter:
         spark = getattr(self.book, "spark", None)
         if spark is not None:
             sc = spark.sparkContext
-            # FAIR pool per page so concurrent Spark actions share the
-            # cluster; the job group attributes the page's jobs to it
+            # the job group attributes the page's jobs to it
             # (statusTracker().getJobIdsForGroup) even when pages overlap
-            sc.setLocalProperty("spark.scheduler.pool", f"{self.name}/{name}")
             group = f"{self.book.name}/{self.name}/{name}"
             sc.setJobGroup(group, group)
         try:
@@ -136,7 +133,6 @@ class Chapter:
         finally:
             if spark is not None:
                 for prop in (
-                    "spark.scheduler.pool",
                     "spark.jobGroup.id",
                     "spark.job.description",
                     "spark.job.interruptOnCancel",

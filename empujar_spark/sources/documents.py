@@ -131,24 +131,25 @@ class DocumentIndex:
         bounded parallelism) → one batch upsert plan: new docs win by key,
         existing non-matching docs survive. Executor parallelism replaces
         the manual concurrency cap."""
-        from empujar_spark.catalog import Warehouse  # reuse the upsert plan
+        # reuse the Warehouse's batch plan and row-dict conversion
+        from empujar_spark.catalog import _arrow_table, _plan_batch
 
+        local = not isinstance(data, DataFrame) or data.isLocal()
         if not isinstance(data, DataFrame):
             from empujar_spark import types as lattice
 
             rows = list(data)
             col_types = lattice.infer_column_types(rows)
-            tuples = lattice.normalize_rows(rows, col_types)
+            schema = lattice.to_struct_type(col_types)
             data = self.spark.createDataFrame(
-                tuples, lattice.to_struct_type(col_types)
+                _arrow_table(lattice.normalize_rows(rows, col_types), schema), schema
             )
         # a batch that repeats an id keeps its last row, whether it
-        # creates the index or updates it
-        deduped = (
-            Warehouse._dedup_batch(data, key) if key in data.columns else data
-        )
+        # creates the index or updates it; a driver-held batch of unique
+        # ids plans no dedup window
+        deduped, _ = _plan_batch(data, [key] if key in data.columns else [], local)
         if index not in self._indices:
-            # checkpointed like a merged index below, so the dedup window
+            # checkpointed like a merged index below, so a dedup window
             # runs once and the surviving row of a repeated id stays fixed
             created = deduped.localCheckpoint(eager=False)
             self.register(index, created)  # infers the date-column cache once

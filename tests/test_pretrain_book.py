@@ -3,6 +3,8 @@ orchestration model (book → chapters → pages) driving the training-data
 pipeline operators: ingest-dedup → curate → span-dedup → split+pack.
 Modeled on test_etl_book (the port of test/integration/etl.js)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -51,6 +53,114 @@ def test_rerun_is_idempotent(pre_wh, spark):
     after = {t: pre_wh.table_size(t) for t in pre_wh.show_tables()
              if t != "empujar"}
     assert after == before
+
+
+def test_rerun_quality_audit_upsert_is_driver_held(pre_wh, spark, monkeypatch):
+    """The validate page hands its collected audit over as an Arrow
+    table, a driver-local relation, so the rerun's ``quality_audit``
+    upsert takes the driver-held plan: at most two Spark jobs (the key
+    broadcast and the rewrite) and at most two files (the stored rows
+    and the batch), not a cached batch of ``shuffle.partitions`` files."""
+    import uuid
+
+    from empujar_spark.books.pretrain import build_pretrain_book
+    from empujar_spark.catalog import Warehouse
+
+    sc = spark.sparkContext
+    insert, jobs = Warehouse.insert_data, []
+
+    def counted(self, table, *args, **kwargs):
+        if table != "quality_audit":
+            return insert(self, table, *args, **kwargs)
+        page = sc.getLocalProperty("spark.jobGroup.id")
+        group = f"audit-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            return insert(self, table, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", page)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(Warehouse, "insert_data", counted)
+    build_pretrain_book(spark, SF, pre_wh).run()
+    assert len(jobs) == 1 and jobs[0] <= 2, jobs
+    data_dir = pre_wh._data_dir("quality_audit")
+    files = [n for _r, _d, ns in os.walk(data_dir) for n in ns if n.endswith(".parquet")]
+    assert len(files) <= 2, files
+    assert pre_wh.table_size("quality_audit") == 7
+
+
+def _digest(wh) -> dict:
+    """Each table's row count and an order-free hash of all its columns;
+    the book's own state-event table is left out (it holds timings)."""
+    out = {}
+    for t in wh.show_tables():
+        if t != "empujar":
+            df = wh.read(t)
+            h = F.sum(F.pmod(F.xxhash64(*df.columns), F.lit(1 << 40)))
+            out[t] = tuple(df.select(F.count(F.lit(1)), h).first())
+    return out
+
+
+def test_rerun_after_a_failed_commit_converges(spark, tmp_path, monkeypatch):
+    """A book that dies right after its k-th commit, for every k of the
+    run, and is then rerun cleanly leaves every table as an uninterrupted
+    run does. v1 delivers 400 documents and embeddings, v2 all 500 (one
+    more benchmark document, doc_id 485); each case starts from a copy
+    of the v1 warehouse."""
+    import shutil
+    import threading
+
+    import pyarrow.parquet as pq
+
+    from empujar_spark.books.pretrain import build_pretrain_book
+    from empujar_spark.catalog import Warehouse
+
+    def source(name, n):
+        src = str(tmp_path / name)
+        os.makedirs(src)
+        for t in ("documents", "embeddings"):
+            rows = pq.read_table(f"{SF}/{t}.parquet").slice(0, n)
+            pq.write_table(rows, os.path.join(src, f"{t}.parquet"))
+        return src
+
+    v1, v2 = source("v1", 400), source("v2", 500)
+    base = str(tmp_path / "base")
+    build_pretrain_book(spark, v1, Warehouse(spark, base, primary_key="doc_id")).run()
+
+    write, lock, commits = Warehouse._write, threading.Lock(), []
+
+    def run_v2(name, crash_after=None):
+        path = str(tmp_path / name)
+        shutil.copytree(base, path)
+        wh = Warehouse(spark, path, primary_key="doc_id")
+        commits.clear()
+
+        def crashing(self, table, df, meta):
+            n = write(self, table, df, meta)
+            with lock:
+                commits.append(table)
+                k = len(commits)
+            if k == crash_after:
+                raise RuntimeError(f"crash after commit {k} ({table})")
+            return n
+
+        monkeypatch.setattr(Warehouse, "_write", crashing)
+        try:
+            build_pretrain_book(spark, v2, wh).run()
+        finally:
+            monkeypatch.setattr(Warehouse, "_write", write)
+        return wh
+
+    want = _digest(run_v2("uninterrupted"))
+    n_commits = len(commits)
+    assert n_commits >= 9 and "quality_audit" in want
+    for k in range(1, n_commits + 1):
+        with pytest.raises(Exception, match=f"crash after commit {k}"):
+            run_v2(f"crash-{k}", crash_after=k)
+        wh = Warehouse(spark, str(tmp_path / f"crash-{k}"), primary_key="doc_id")
+        build_pretrain_book(spark, v2, wh).run()
+        assert _digest(wh) == want, k
 
 
 def test_curated_subset_and_signals(pre_wh):

@@ -1505,6 +1505,22 @@ def test_driver_held_upsert_runs_two_jobs(warehouse, spark):
         "a1999", "b2000", "b2999", "c3000", "c4999"]
 
 
+def test_driver_held_create_runs_one_job(spark, tmp_path):
+    """A create is planned from its keys like an upsert: a 2,000-row
+    driver-held batch of unique keys skips the dedup window, so it issues
+    one Spark job, the write, and leaves one file."""
+    from empujar_spark.catalog import Warehouse
+
+    rows = [{"id": i, "v": f"a{i}"} for i in range(2000)]
+    pdf = spark.createDataFrame(pd.DataFrame(rows))
+    assert pdf.isLocal()
+    for name, batch in [("rows", rows), ("pandas", pdf)]:
+        wh = Warehouse(spark, str(tmp_path / name), primary_key="id")
+        n, jobs = _jobs_of(spark, lambda: wh.insert_data("t", batch))
+        assert (n, jobs, n_files(wh, "t")) == (2000, 1, 1), name
+        assert len(rows_by_id(wh, "t")) == 2000
+
+
 def test_driver_held_upsert_files_follow_batch_size(warehouse, spark, monkeypatch):
     """A driver-held batch of unique keys is written as one file per
     ``_LOCAL_BATCH_ROWS_PER_FILE`` rows, so a large batch is not one task;
@@ -1572,20 +1588,38 @@ _UPSERT_CASES = {
 }
 
 
-@pytest.mark.parametrize("case", sorted(_UPSERT_CASES))
+# the same batches creating the table: case → the column's sorted values
+_CREATE_VALUES = {
+    "keep-first": ["a", "c"],
+    "keep-last": ["b", "d"],
+    "order-col": ["a", "d"],
+    "null-keys": ["n2", "new"],
+    "nan-key": ["n2", "new"],
+    "composite-key": [10, 20],
+}
+
+
+@pytest.mark.parametrize(
+    "case", sorted(_UPSERT_CASES) + [f"create-{c}" for c in sorted(_CREATE_VALUES)]
+)
 def test_driver_held_upsert_equals_distributed(spark, tmp_path, case):
     """The driver-held plan (keys read on the driver, dedup window only
     for repeated keys) gives the table and return value the
-    distributed persist-and-count plan gives, for row dicts and for a
-    local relation. The distributed batch is the local one through
-    ``repartition(2)``, except where row position decides which
-    duplicate survives: a shuffle leaves position undefined, so there it
-    is an order-keeping RDD scan."""
+    distributed plan gives (persist-and-count on upsert, the dedup
+    window on create), for row dicts and for a local relation. The
+    distributed batch is the local one through ``repartition(2)``,
+    except where row position decides which duplicate survives: a
+    shuffle leaves position undefined, so there it is an order-keeping
+    RDD scan. A ``create-`` case writes the batch into a new table."""
     import pyarrow as pa
 
     from empujar_spark.catalog import Warehouse
 
+    create = case.startswith("create-")
+    case = case.removeprefix("create-")
     stored, rows, kwargs, expect_n, by_position, (col, values) = _UPSERT_CASES[case]
+    if create:
+        values = _CREATE_VALUES[case]
     local = spark.createDataFrame(pa.Table.from_pylist(rows))
     if by_position:
         distributed = spark.createDataFrame(rows, local.schema)
@@ -1595,7 +1629,8 @@ def test_driver_held_upsert_equals_distributed(spark, tmp_path, case):
     tables = []
     for name, batch in [("rows", rows), ("local", local), ("distributed", distributed)]:
         wh = Warehouse(spark, str(tmp_path / name), primary_key="id")
-        wh.insert_data("t", stored, merge_key=kwargs.get("merge_key"))
+        if not create:
+            wh.insert_data("t", stored, merge_key=kwargs.get("merge_key"))
         assert wh.insert_data("t", batch, **kwargs) == expect_n, name
         table = wh.read("t").collect()
         assert sorted((r[col] for r in table), key=repr) == sorted(values, key=repr), name
